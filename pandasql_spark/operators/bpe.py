@@ -27,10 +27,10 @@ non-overlapping greedy scan ("aaa" + rule (a,a) -> ["aa","a"]).
 exhaustively — which reproduces the training-time corpus state by
 construction. (Priority-queue encoding à la GPT-2 differs only for
 merge tables NOT learned from the corpus being encoded; documented
-deviation.) The default path is an Arrow-batched pandas UDF with a
+deviation.) The encoder is an Arrow-batched pandas UDF with a
 per-batch word memo (natural-language vocab repeats — the dedup.py
-cache trick); ``impl="expr"`` cross-checks it with the same fold
-composition in pure column expressions.
+cache trick); an expression encoder would grow its tree by one fold
+per merge rule.
 
 No reference counterpart: the reference engine (pandaSQL) has no
 tokenizer induction; this is part of the training-pipeline surface
@@ -189,8 +189,8 @@ def train_bpe(
 
 def encode_word(word: str, merges: Sequence[tuple[str, str]]) -> list[str]:
     """Pure-Python single-word encoder: apply each rule exhaustively in
-    learned order (greedy left-to-right per rule). Shared by the pandas
-    UDF below and the test reference."""
+    learned order (greedy left-to-right per rule). The per-word step of
+    ``encode_bpe``."""
     syms = list(word)
     for left, right in merges:
         if len(syms) < 2:
@@ -213,28 +213,13 @@ def encode_bpe(
     merges: Sequence[tuple[str, str]],
     text_col: str = "text",
     out_col: str = "bpe_tokens",
-    impl: str = "pandas",
 ) -> DataFrame:
-    """Add ``out_col``: the document's whitespace words, each encoded
-    with the merge table, flattened to one subword array.
-
-    impl="pandas" (default): Arrow-batched UDF with a per-batch
-    word->tokens memo — the scale path (per-word cost is paid once per
-    distinct word per batch). impl="expr": the same greedy fold
-    composed per rule in column expressions — zero Python, but the
-    expression tree grows with len(merges); the cross-check path and
-    the right choice for short merge tables."""
+    """Add ``out_col``: the document's single-space-separated words
+    (empty words dropped), each encoded with the merge table, flattened
+    to one subword array; NULL text stays NULL. An Arrow-batched UDF
+    with a per-batch word->tokens memo, so each distinct word's cost
+    is paid once per batch."""
     merges = [tuple(m) for m in merges]
-    if impl == "expr":
-        # drop empty words (leading/trailing/double spaces) — the
-        # pandas path's `if not w: continue`, kept in lockstep
-        words = F.filter(tokens(text_col), lambda w: F.length(w) > 0)
-        syms = F.transform(words, lambda w: _codepoints(w))
-        for left, right in merges:
-            syms = F.transform(syms, lambda s: _merge_fold(s, left, right))
-        return df.withColumn(out_col, F.flatten(syms))
-    if impl != "pandas":
-        raise ValueError(f"impl must be 'pandas' or 'expr', got {impl!r}")
 
     @F.pandas_udf(ArrayType(StringType()))
     def _encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:

@@ -111,7 +111,6 @@ def minhash_signatures(
     shingle_k: int = 3,
     seed: int = 42,
     base_hash: str = "xxhash64",
-    impl: str = "numpy",
     hashed_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id, signature: array<long>[num_hashes]) MinHash signatures.
@@ -120,20 +119,14 @@ def minhash_signatures(
     2^31−1), then each of the ``num_hashes`` permutations is the min
     over shingles of the universal hash ``(a*h + b) mod p``.
 
-    ``impl``:
-    - ``"numpy"`` (default): the permutation minima run in an
-      Arrow-batched ``mapInPandas`` kernel — one (num_hashes × ΣS)
-      int64 broadcast multiply + ``np.minimum.reduceat`` segment-min
-      per batch. Higher-order-function lambdas are evaluated per
-      element in Catalyst's INTERPRETED path (they're outside
-      whole-stage codegen), so vectorized C beats them here the same
-      way the SimHash kernel did — measured ~4× on the sf0.1 corpus.
-      Values are bit-identical to the HOF path: pure int64 arithmetic,
-      max magnitude a·h < 2^62.
-    - ``"hof"``: pure column-expression path (no Python at all) — the
-      cross-engine reference implementation; the q23 gate oracle
-      recomputes it in SQL. Kept both for auditability and for
-      Python-less deployments.
+    The permutation minima run in an Arrow-batched ``mapInPandas``
+    kernel — one (num_hashes × ΣS) int64 broadcast multiply +
+    ``np.minimum.reduceat`` segment-min per batch. Higher-order-function
+    lambdas are evaluated per element in Catalyst's INTERPRETED path
+    (they're outside whole-stage codegen), so vectorized C beats them
+    here the same way the SimHash kernel did — measured ~4× on the
+    sf0.1 corpus. Pure int64 arithmetic, max magnitude a·h < 2^62, so
+    the values are exact; the q23 gate oracle recomputes them in SQL.
 
     ``base_hash``: ``"xxhash64"`` (default, fastest JVM hash) or
     ``"md5"`` — first 15 hex chars (60 bits, signed-long-safe on every
@@ -145,77 +138,46 @@ def minhash_signatures(
     per-doc 31-bit base hashes (exactly the `minhash_base_hashes`
     expression) — lets callers that ALSO need the shingle sets (the
     LSH+verify family) shingle the corpus once and share it; text_col/
-    shingle_k/base_hash are then ignored. numpy impl only (the hof
-    path derives everything from text in one expression tree)."""
-    from ..functions.text import let_bound
+    shingle_k/base_hash are then ignored."""
+    import numpy as np
 
     coeffs = _hash_coefficients(num_hashes, seed)
-    sh = F.array_distinct(word_shingles(text_col, shingle_k))
-    base = _minhash_base(sh, base_hash)
-
-    if hashed_df is not None and impl != "numpy":
-        raise ValueError("hashed_df requires impl='numpy'")
-    if impl == "numpy":
-        import numpy as np
-
-        a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
-        b_vec = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
-        hashed = (
-            hashed_df
-            if hashed_df is not None
-            else df.select(F.col(id_col).alias("id"), base.alias("bh"))
+    a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)[:, None]
+    b_vec = np.array([b for _, b in coeffs], dtype=np.int64)[:, None]
+    if hashed_df is None:
+        sh = F.array_distinct(word_shingles(text_col, shingle_k))
+        hashed = df.select(
+            F.col(id_col).alias("id"), _minhash_base(sh, base_hash).alias("bh")
         )
+    else:
+        hashed = hashed_df
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                lens = pdf["bh"].map(len).to_numpy(dtype=np.int64)
-                # word_shingles guarantees >=1 shingle; guard anyway —
-                # reduceat misbehaves on empty segments
-                if (lens == 0).any():
-                    lens = np.maximum(lens, 1)
-                    pdf = pdf.assign(
-                        bh=[list(x) if len(x) else [0] for x in pdf["bh"]]
-                    )
-                flat = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["bh"]])
-                vals = (a_vec * flat[None, :] + b_vec) % _MERSENNE_31
-                starts = np.zeros(len(lens), dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                mins = np.minimum.reduceat(vals, starts, axis=1)  # (H, ndocs)
-                yield pd.DataFrame({"id": pdf["id"], "signature": list(mins.T)})
-
-        # Derive the id field's type from the input schema — hardcoding
-        # "long" here would Arrow-crash callers with string/decimal doc
-        # ids (LSH only needs orderable ids, any type is valid).
-        id_ddl = df.schema[id_col].dataType.simpleString()
-        return hashed.mapInPandas(
-            kernel, schema=f"id {id_ddl}, signature array<long>"
-        )
-
-    # "hof": let-bind the base hashes (evaluated ONCE per row) and loop
-    # over a literal (a, b) coefficient array — instead of num_hashes
-    # separate expression copies each re-shingling + re-hashing the text
-    # (see text.let_bound rationale; a plain extra projection gets
-    # collapsed back by Catalyst's CollapseProject and re-inlines it).
-    coeff_arr = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in coeffs
-        ]
-    )
-    sig = let_bound(
-        base,
-        lambda bb: F.transform(
-            coeff_arr,
-            lambda c: F.array_min(
-                F.transform(
-                    bb, lambda h: F.pmod(c["a"] * h + c["b"], F.lit(_MERSENNE_31))
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            lens = pdf["bh"].map(len).to_numpy(dtype=np.int64)
+            # word_shingles guarantees >=1 shingle; guard anyway —
+            # reduceat misbehaves on empty segments
+            if (lens == 0).any():
+                lens = np.maximum(lens, 1)
+                pdf = pdf.assign(
+                    bh=[list(x) if len(x) else [0] for x in pdf["bh"]]
                 )
-            ),
-        ),
+            flat = np.concatenate([np.asarray(x, dtype=np.int64) for x in pdf["bh"]])
+            vals = (a_vec * flat[None, :] + b_vec) % _MERSENNE_31
+            starts = np.zeros(len(lens), dtype=np.int64)
+            np.cumsum(lens[:-1], out=starts[1:])
+            mins = np.minimum.reduceat(vals, starts, axis=1)  # (H, ndocs)
+            yield pd.DataFrame({"id": pdf["id"], "signature": list(mins.T)})
+
+    # Derive the id field's type from the input schema — hardcoding
+    # "long" here would Arrow-crash callers with string/decimal doc
+    # ids (LSH only needs orderable ids, any type is valid).
+    id_ddl = df.schema[id_col].dataType.simpleString()
+    return hashed.mapInPandas(
+        kernel, schema=f"id {id_ddl}, signature array<long>"
     )
-    return df.select(F.col(id_col).alias("id"), sig.alias("signature"))
 
 
 def band_table(

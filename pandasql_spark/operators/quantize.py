@@ -4,24 +4,22 @@ bounded, per-vector reconstruction error, before anything fancier
 (PQ/OPQ) is justified.
 
 Per-vector affine min/max quantization: codes q = round((x - lo)/scale)
-in [0, 255] with lo = min(x), scale = (max(x) - lo)/255. Two kernels
-with bit-identical results (same IEEE sequence; round is exact
-half-up via fractional-part comparison, never floor(t + 0.5) whose
-addition can misround at the boundary):
+in [0, 255] with lo = min(x), scale = (max(x) - lo)/255.
 
-- ``impl="numpy"`` (default): Arrow-batched mapInPandas — vectorized
-  BLAS-style array math. Higher-order functions run INTERPRETED in
-  Spark (measured: the expr path is exactly linear at ~100 µs/vector,
-  3× of it the md5-over-string-casts audit column), so the Arrow
-  kernel is the production path, same trade the repetition/semantic
-  operators made.
-- ``impl="expr"``: pure column higher-order functions — zero Python,
-  and the form the q89 DuckDB oracle mirrors 1:1. The equality of the
-  two impls is asserted in tests (the repo's kernel/parity pattern).
+``quantize_embeddings``/``dequantize_embeddings`` are column
+expressions (the storage transform composes into any projection).
+``quantization_report`` is an Arrow-batched mapInPandas audit kernel:
+higher-order functions run INTERPRETED in Spark (measured: an
+expression-only report is exactly linear at ~100 µs/vector, 3× of it
+the md5-over-string-casts audit column), the same trade the
+repetition/semantic operators made. Both follow the same IEEE
+sequence, with round as exact half-up via fractional-part comparison,
+never floor(t + 0.5) whose addition can misround at the boundary; the
+q89 DuckDB oracle recomputes the report, and tests check it against
+the expression path.
 
-Everything is one scan, ZERO shuffles either way. Constant vectors
-(max == min) quantize to all-zero codes with scale 0 and reconstruct
-exactly.
+Everything is one scan, ZERO shuffles. Constant vectors (max == min)
+quantize to all-zero codes with scale 0 and reconstruct exactly.
 
 Reference scope: the reference engine has no vector surface at all
 (SURVEY.md §2); beyond-reference inventory, composing with the
@@ -86,36 +84,13 @@ def quantization_report(
     df: DataFrame,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Per-vector quantization audit: (id, dim, lo, scale, max_abs_err,
     code fingerprint). max_abs_err is the TRUE reconstruction error
     (recomputed against the original vector in the same pass — still
     zero-shuffle); the ``scale/2`` bound holds by construction and is
-    asserted in tests, measured here. See module doc for the
-    numpy/expr kernel contract."""
-    if impl not in ("numpy", "expr"):
-        raise ValueError(f"impl must be 'numpy' or 'expr', got {impl!r}")
-    if impl == "expr":
-        vec = F.col(vec_col).cast("array<double>")
-        lo, scale = _lo(vec), _scale(vec)
-        codes = _codes(vec, lo, scale)
-        recon_err = F.zip_with(
-            vec,
-            codes,
-            lambda x, q: F.abs(x - (lo + q.cast("double") * scale)),
-        )
-        return df.select(
-            F.col(id_col),
-            F.size(vec).cast("long").alias("dim"),
-            F.round(lo, 6).alias("lo"),
-            F.round(scale, 6).alias("scale"),
-            F.round(F.array_max(recon_err), 6).alias("max_abs_err"),
-            F.md5(
-                F.array_join(F.transform(codes, lambda q: q.cast("string")), ",")
-            ).alias("code_fp"),
-        )
-
+    asserted in tests, measured here. ``code_fp`` is the md5 of the
+    comma-joined codes ``quantize_embeddings`` produces."""
     id_type = next(f.dataType.simpleString() for f in df.schema.fields
                    if f.name == id_col)
     schema = (f"{id_col} {id_type}, dim long, lo double, scale double, "

@@ -11,23 +11,14 @@ rules. This module computes token-level analogs per document:
 - ``top_gram_frac``  — top_gram_count / n_grams
 - ``dup_gram_frac``  — (sum of counts of n-grams occurring >1 time) / n_grams
 
-Plan shape — three implementations, equivalent by test:
-
-- ``impl="numpy"`` (default): Arrow-batched ``mapInPandas`` kernel
-  counting grams per row with a hash map. ZERO shuffles — one scan,
-  one Python crossing. Same lesson as the MinHash kernel (SCALING.md
-  "interpreted HOFs"): Catalyst ``aggregate()`` lambdas over structs
-  are interpreted per-element, and the measured sf0.1 cost was ~3.9 s
-  HOF vs ~0.6 s for the batched kernel.
-- ``impl="hof"``: pure column expressions — the n-gram array is
-  sorted (``array_sort``) and a single ``aggregate`` pass counts run
-  lengths (equal adjacent elements), tracking the max run and the
-  duplicated-mass sum. Also zero-shuffle and the no-Python-workers
-  fallback; slower on wide docs because the lambda is interpreted.
-- ``impl="explode"``: explode n-grams → groupBy(id, gram) count →
-  groupBy(id) agg. Two shuffles with map-side partial aggregation;
-  kept as the cross-checking second algorithm and as the oracle's
-  (DuckDB SQL) literal shape.
+Plan shape: one Arrow-batched ``mapInPandas`` kernel that counts grams
+per row with a hash map. ZERO shuffles — one scan, one Python
+crossing. Same lesson as the MinHash kernel (SCALING.md "interpreted
+HOFs"): Catalyst ``aggregate()`` lambdas over structs are interpreted
+per-element, and the measured sf0.1 cost was ~3.9 s for a sorted-array
+HOF fold vs ~0.6 s for the batched kernel. The q67 DuckDB oracle
+(explode → count per gram → aggregate per doc) is the independent
+check.
 
 Reference scope note: the reference engine (pandaSQL) has no quality
 filtering; this is part of the beyond-reference training-data-pipeline
@@ -57,124 +48,53 @@ def word_ngrams(text_col: Column | str, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _run_length_stats(sorted_grams: Column) -> Column:
-    """struct(top, dup) from a SORTED array: ``top`` = longest run of
-    equal adjacent elements (= max n-gram count), ``dup`` = total length
-    of runs longer than 1 (= duplicated n-gram mass). Single
-    ``aggregate`` pass; the accumulator carries (prev, run, top, dup)
-    and ``run = 0`` marks "no element seen yet" so no sentinel value
-    can collide with real gram text."""
-    zero = F.lit(0).cast("long")
-    acc0 = F.struct(
-        F.lit("").alias("prev"),
-        zero.alias("run"),
-        zero.alias("top"),
-        zero.alias("dup"),
-    )
-
-    def merge(acc, x):
-        cont = (acc["run"] > 0) & (x == acc["prev"])
-        # closing the previous run: fold it into top/dup
-        top_closed = F.greatest(acc["top"], acc["run"])
-        dup_closed = acc["dup"] + F.when(acc["run"] > 1, acc["run"]).otherwise(zero)
-        return F.struct(
-            x.alias("prev"),
-            F.when(cont, acc["run"] + 1).otherwise(F.lit(1).cast("long")).alias("run"),
-            F.when(cont, acc["top"]).otherwise(top_closed).alias("top"),
-            F.when(cont, acc["dup"]).otherwise(dup_closed).alias("dup"),
-        )
-
-    def finish(acc):
-        return F.struct(
-            F.greatest(acc["top"], acc["run"]).alias("top"),
-            (acc["dup"] + F.when(acc["run"] > 1, acc["run"]).otherwise(zero)).alias("dup"),
-        )
-
-    return F.aggregate(sorted_grams, acc0, merge, finish)
-
-
 def repetition_signals(
     df: DataFrame,
     n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "numpy",
 ) -> DataFrame:
     """(id_col, n_grams, top_gram_count, top_gram_frac, dup_gram_frac)
-    per document; documents with zero n-grams (< n tokens) are omitted,
-    mirroring contamination.contaminated_docs. Fractions are rounded to
-    6 places for cross-engine comparability."""
+    per document; documents with zero n-grams (< n tokens, or NULL
+    text) are omitted, mirroring contamination.contaminated_docs.
+    Fractions are rounded to 6 places for cross-engine comparability."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    if impl == "numpy":
-        from collections import Counter
+    from collections import Counter
 
-        import pandas as pd
+    # id schema derived from the input column, not hardcoded —
+    # string/int doc ids both flow through (cf. dedup.py kernels)
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = (
+        f"{id_col} {id_type}, n_grams long, "
+        "top_gram_count long, dup_gram_n long"
+    )
 
-        # id schema derived from the input column, not hardcoded —
-        # string/int doc ids both flow through (cf. dedup.py kernels)
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = (
-            f"{id_col} {id_type}, n_grams long, "
-            "top_gram_count long, dup_gram_n long"
-        )
+    def kernel(batches):
+        for pdf in batches:
+            ids, ngs, tops, dups = [], [], [], []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                if t is None:
+                    continue  # NULL text ⇒ no grams
+                toks = t.split(" ")
+                m = len(toks) - n + 1
+                if m < 1:
+                    continue
+                c = Counter(" ".join(toks[j : j + n]) for j in range(m))
+                ids.append(i)
+                ngs.append(m)
+                tops.append(max(c.values()))
+                dups.append(sum(v for v in c.values() if v > 1))
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "n_grams": ngs,
+                    "top_gram_count": tops,
+                    "dup_gram_n": dups,
+                }
+            )
 
-        def kernel(batches):
-            for pdf in batches:
-                ids, ngs, tops, dups = [], [], [], []
-                for i, t in zip(pdf[id_col], pdf[text_col]):
-                    if t is None:
-                        continue  # match hof/explode: NULL text ⇒ no grams
-                    toks = t.split(" ")
-                    m = len(toks) - n + 1
-                    if m < 1:
-                        continue
-                    c = Counter(
-                        " ".join(toks[j : j + n]) for j in range(m)
-                    )
-                    ids.append(i)
-                    ngs.append(m)
-                    tops.append(max(c.values()))
-                    dups.append(sum(v for v in c.values() if v > 1))
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "n_grams": ngs,
-                        "top_gram_count": tops,
-                        "dup_gram_n": dups,
-                    }
-                )
-
-        agg = df.select(id_col, text_col).mapInPandas(kernel, out_schema)
-    elif impl == "hof":
-        grams = word_ngrams(text_col, n)
-        stats = df.select(
-            F.col(id_col),
-            F.size(grams).cast("long").alias("n_grams"),
-            _run_length_stats(F.array_sort(grams)).alias("s"),
-        ).filter(F.col("n_grams") > 0)
-        agg = stats.select(
-            id_col,
-            "n_grams",
-            F.col("s.top").alias("top_gram_count"),
-            F.col("s.dup").alias("dup_gram_n"),
-        )
-    elif impl == "explode":
-        exploded = df.select(
-            F.col(id_col), F.explode(word_ngrams(text_col, n)).alias("g")
-        )
-        counts = exploded.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("cnt"))
-        agg = counts.groupBy(id_col).agg(
-            F.sum("cnt").alias("n_grams"),
-            F.max("cnt").alias("top_gram_count"),
-            F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0)).alias(
-                "dup_gram_n"
-            ),
-        )
-    else:
-        raise ValueError(
-            f"impl must be 'numpy', 'hof', or 'explode', got {impl!r}"
-        )
+    agg = df.select(id_col, text_col).mapInPandas(kernel, out_schema)
     return agg.select(
         id_col,
         "n_grams",
@@ -192,7 +112,6 @@ def repetition_filter(
     max_top_gram_frac: float = 0.20,
     max_dup_gram_frac: float = 0.60,
     min_grams: int = 16,
-    impl: str = "numpy",
 ) -> DataFrame:
     """Drop documents whose repetition signals exceed the (Gopher-style)
     thresholds. Docs with fewer than ``min_grams`` n-grams are KEPT —
@@ -200,7 +119,7 @@ def repetition_filter(
     all-unique bigrams already has top_gram_frac 0.25); Gopher bounds
     short docs with a separate word-count rule, not this one. Returns
     the input columns."""
-    sig = repetition_signals(df, n=n, text_col=text_col, id_col=id_col, impl=impl)
+    sig = repetition_signals(df, n=n, text_col=text_col, id_col=id_col)
     bad = sig.filter(
         (F.col("n_grams") >= min_grams)
         & (

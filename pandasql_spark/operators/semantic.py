@@ -3,10 +3,9 @@ then near-dup only WITHIN clusters (Abbas et al., arXiv:2303.09540).
 
 The scale argument is the clustering itself: all-pairs cosine is
 O(n²); clustering first bounds the pair work to Σ|cluster|², and the
-per-cluster join is an equi-join on the cluster id — bucketed by
-construction, never a cross join. With k ≈ √n cells of roughly even
-size the pair stage is ~O(n^1.5), and each cluster's pairs co-locate
-on one reducer.
+pair stage groups by the cluster id — bucketed by construction, never
+a cross join. With k ≈ √n cells of roughly even size the pair stage
+is ~O(n^1.5), and each cluster's pairs co-locate on one reducer.
 
 Clustering is a deterministic distributed Lloyd's k-means —
 deliberately NOT Spark ML's KMeans (whose k-means|| init and
@@ -14,11 +13,9 @@ aggregation order are not reproducible across engines), because the
 q69 gate recomputes the whole pipeline in DuckDB SQL:
 
 - init: the k lowest-``id_col`` vectors (bit-exact both engines);
-- assignment: squared-euclidean argmin, ties to the lowest cell id.
-  Default is an Arrow-batched BLAS kernel; the ``assign_impl="expr"``
-  left-to-right ``zip_with``/``aggregate`` fold (mirrored by
-  ``list_reduce`` in the oracle — identical fold order ⇒ identical
-  doubles) is the bit-exact cross-check (see ``assign_cells``);
+- assignment: squared-euclidean argmin, ties to the lowest cell id,
+  in an Arrow-batched BLAS kernel (see ``assign_cells``); the oracle
+  folds the same distances left to right with ``list_reduce``;
 - update: per-cell per-dimension mean, ROUNDED to 6 decimals — the
   one place engines could drift (summation order in a mean is not
   associative); quantizing each iteration's centroids makes the
@@ -28,7 +25,7 @@ q69 gate recomputes the whole pipeline in DuckDB SQL:
 Centroids live on the driver between iterations (k × dim doubles —
 the same topology as Spark ML KMeans; at k ≈ √n = 10⁴ and dim 10³
 that is ~80 MB, still driver-sized), so each assignment pass is a
-ZERO-shuffle projection against literal centroid arrays; each update
+ZERO-shuffle pass with the centroids in the kernel closure; each update
 is one partial-aggregated groupBy of (cell, dim) rows.
 
 Dedup rule: within a cluster, drop x when some y with y.id < x.id has
@@ -43,67 +40,44 @@ from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.similarity import cosine
-
-
-def _sq_dist(vec, centroid: list[float]):
-    """Left-to-right fold of squared euclidean distance to a literal
-    centroid (fold order mirrored by the DuckDB oracle)."""
-    c = F.array(*[F.lit(float(x)) for x in centroid])
-    diffs = F.zip_with(vec, c, lambda a, b: (a - b) * (a - b))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
-
 
 def assign_cells(
     df: DataFrame,
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
 ) -> DataFrame:
     """Tag every row with the nearest centroid's index (``cid``) — one
-    pass over the data, no shuffle either way. Ties go to the lowest
-    cid (``np.argmin`` keeps the first minimum; the expr path's min
-    over (dist, cid) structs orders lexicographically — identical).
+    pass over the data, no shuffle. Ties go to the lowest cid
+    (``np.argmin`` keeps the first minimum).
 
-    ``impl="numpy"`` (default) is an Arrow-batched ``mapInPandas``
-    kernel: distances via one BLAS slab per batch. The ``impl="expr"``
-    fold path (k × dim interpreted HOF ops per row — measured ~1 s per
-    pass on 5k×64 vs ~0.1 s batched) mirrors the q69 oracle's
-    ``list_reduce`` bit-for-bit and remains the cross-check. BLAS vs
-    fold summation differs by last-ulp amounts; an argmin flip needs a
-    near-exact distance tie between two centroids, which quantized
-    centroids and real data don't produce (equality regression-tested
-    corpus-wide, and the q69 gate value-checks end-to-end)."""
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    An Arrow-batched ``mapInPandas`` kernel: distances via one BLAS
+    slab per batch (measured ~0.1 s per pass on 5k×64, vs ~1 s for a
+    k × dim interpreted HOF fold). BLAS summation differs from the
+    q69 oracle's left-to-right ``list_reduce`` fold by last-ulp
+    amounts; an argmin flip needs a near-exact distance tie between
+    two centroids, which quantized centroids and real data don't
+    produce (the q69 gate value-checks end-to-end, and tests compare
+    against a left-to-right Python fold)."""
+    import numpy as np
 
-        c = np.asarray(centroids, dtype=np.float64)  # (k, dim)
-        fields = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-        )
-        out_schema = f"{fields}, cid int"
+    c = np.asarray(centroids, dtype=np.float64)  # (k, dim)
+    fields = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
+    )
+    out_schema = f"{fields}, cid int"
 
-        def kernel(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                # ||v - c||² = ||v||² - 2 v·c + ||c||²; ||v||² is
-                # constant per row so argmin needs only the last two
-                d = -2.0 * (v @ c.T) + np.einsum("ij,ij->i", c, c)[None, :]
-                yield pdf.assign(cid=np.argmin(d, axis=1).astype("int32"))
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            # ||v - c||² = ||v||² - 2 v·c + ||c||²; ||v||² is
+            # constant per row so argmin needs only the last two
+            d = -2.0 * (v @ c.T) + np.einsum("ij,ij->i", c, c)[None, :]
+            yield pdf.assign(cid=np.argmin(d, axis=1).astype("int32"))
 
-        return df.mapInPandas(kernel, out_schema)
-    if impl != "expr":
-        raise ValueError(f"impl must be 'numpy' or 'expr', got {impl!r}")
-    vec = F.col(vec_col).cast("array<double>")
-    dists = F.array(*[
-        F.struct(_sq_dist(vec, c).alias("d"), F.lit(i).alias("cid"))
-        for i, c in enumerate(centroids)
-    ])
-    return df.withColumn("cid", F.array_min(dists)["cid"])
+    return df.mapInPandas(kernel, out_schema)
 
 
 def _plan_is_cached(df: DataFrame) -> bool | None:
@@ -141,7 +115,6 @@ def lloyd_kmeans(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_impl: str = "numpy",
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic Lloyd's k-means; returns (df + ``cid``, centroids).
 
@@ -201,7 +174,7 @@ def lloyd_kmeans(
         raise ValueError(f"k={k} exceeds corpus size {len(init_rows)}")
     centroids = [[float(x) for x in r[0]] for r in init_rows]
     for _ in range(n_iter):
-        assigned = assign_cells(src, centroids, id_col, vec_col, impl=assign_impl)
+        assigned = assign_cells(src, centroids, id_col, vec_col)
         stats = (
             assigned.select("cid", F.posexplode(F.col(vec_col).cast("array<double>")))
             .groupBy("cid", "pos")
@@ -217,7 +190,7 @@ def lloyd_kmeans(
             if i in by_cell else centroids[i]
             for i in range(k)
         ]
-    final = assign_cells(src, centroids, id_col, vec_col, impl=assign_impl)
+    final = assign_cells(src, centroids, id_col, vec_col)
     return (
         attach_cleanup(final, src) if owns_cache else attach_cleanup(final)
     ), centroids
@@ -230,109 +203,64 @@ def semantic_dedup(
     tau: float = 0.35,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "numpy",
-    assign_impl: str = "numpy",
 ) -> DataFrame:
     """(id_col, cid, kept): SemDeDup verdict per row. ``kept`` is false
     when a same-cluster row with a lower id is cosine-similar ≥ tau.
 
-    Pair stage implementations (clustering is identical in both —
-    only the within-cluster cosine moves):
+    The pair stage is one ``applyInPandas`` per cluster: the cosine
+    matrix is a BLAS matmul over the cluster's vectors, exactly how
+    reference SemDeDup implementations compute it (~10× an interpreted
+    per-pair fold, where each cosine walks a ~200-op HOF tree). BLAS
+    summation order differs from the q69 oracle's left-to-right fold
+    by last-ulp amounts; after round-to-6 the verdicts agree unless a
+    pair's cosine sits within ~1e-10 of a rounding boundary (never
+    observed; tests compare against a left-to-right Python fold on the
+    full corpus, and the q69 gate value-checks against the SQL
+    oracle). Zero vectors have cosine 0 against everything, so they
+    are never dropped.
 
-    - ``impl="numpy"`` (default): one ``applyInPandas`` per cluster —
-      the cosine matrix is a BLAS matmul over the cluster's vectors,
-      exactly how reference SemDeDup implementations compute it. ~10×
-      the interpreted-fold path (each pair's cosine there walks a
-      ~200-op interpreted HOF tree). BLAS summation order differs from
-      the fold by last-ulp amounts; after round-to-6 the verdicts agree
-      unless a pair's cosine sits within ~1e-10 of a rounding boundary
-      (never observed; equality is regression-tested on the full
-      corpus and the q69 gate value-checks against the SQL oracle).
-    - ``impl="expr"``: cluster-key equi-join + left-to-right fold
-      cosine — the oracle's literal shape, kept as the cross-check.
-
-    Either way the candidate join's key is ``cid``, so the pair stage
-    shuffles each cluster to one reducer and nothing else. Per-cluster
-    memory is O(|cluster|·dim) for the vectors plus a row-blocked
+    The grouping key is ``cid``, so the pair stage shuffles each
+    cluster to one reducer and nothing else. Per-cluster memory is
+    O(|cluster|·dim) for the vectors plus a row-blocked
     O(block·|cluster|) similarity slab — choose k ≈ √n to keep
     clusters reducer-sized."""
+    import numpy as np
+    import pandas as pd
+
     from .cache import attach_cleanup
 
     assigned, _ = lloyd_kmeans(
-        df, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col,
-        assign_impl=assign_impl,
+        df, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
     )
-    if impl == "numpy":
-        import numpy as np
-        import pandas as pd
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = f"{id_col} {id_type}, cid int, kept boolean"
 
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = f"{id_col} {id_type}, cid int, kept boolean"
-
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(id_col, ignore_index=True)
-            v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.sqrt(np.einsum("ij,ij->i", v, v))
-            norms[norms == 0.0] = 1.0  # zero vectors: cos defined as 0
-            unit = v / norms[:, None]
-            n = len(pdf)
-            kept = np.ones(n, dtype=bool)
-            # row-blocked upper-triangular sweep bounds the slab to
-            # block × n doubles regardless of cluster size
-            block = 1024
-            for s in range(1, n, block):
-                e = min(s + block, n)
-                sims = np.round(unit[s:e] @ unit[:e].T, 6)
-                for i in range(s, e):
-                    if (sims[i - s, :i] >= tau).any():
-                        kept[i] = False
-            return pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cid": pdf["cid"],
-                    "kept": kept,
-                }
-            )
-
-        return attach_cleanup(
-            assigned.groupBy("cid").applyInPandas(kernel, out_schema),
-            getattr(assigned, "cleanup", lambda: None),
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col, ignore_index=True)
+        v = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+        norms = np.sqrt(np.einsum("ij,ij->i", v, v))
+        norms[norms == 0.0] = 1.0  # zero vectors: cos defined as 0
+        unit = v / norms[:, None]
+        n = len(pdf)
+        kept = np.ones(n, dtype=bool)
+        # row-blocked upper-triangular sweep bounds the slab to
+        # block × n doubles regardless of cluster size
+        block = 1024
+        for s in range(1, n, block):
+            e = min(s + block, n)
+            sims = np.round(unit[s:e] @ unit[:e].T, 6)
+            for i in range(s, e):
+                if (sims[i - s, :i] >= tau).any():
+                    kept[i] = False
+        return pd.DataFrame(
+            {
+                id_col: pdf[id_col],
+                "cid": pdf["cid"],
+                "kept": kept,
+            }
         )
-    if impl != "expr":
-        raise ValueError(f"impl must be 'numpy' or 'expr', got {impl!r}")
-    # referenced three times below (join left/right + keep-flag join) —
-    # persist so the assignment pass runs once; the kmeans input cache
-    # composes through cleanup
-    upstream_cleanup = getattr(assigned, "cleanup", lambda: None)
-    assigned = assigned.persist()
-    from ..functions.similarity import l2_norm
 
-    left = assigned.select(
-        F.col("cid"), F.col(id_col).alias("__xid"), F.col(vec_col).alias("__xv")
+    return attach_cleanup(
+        assigned.groupBy("cid").applyInPandas(kernel, out_schema),
+        getattr(assigned, "cleanup", lambda: None),
     )
-    right = assigned.select(
-        F.col("cid"), F.col(id_col).alias("__yid"), F.col(vec_col).alias("__yv")
-    )
-    dropped = (
-        left.join(right, on="cid")
-        .filter(F.col("__yid") < F.col("__xid"))
-        # zero-norm guard: cosine's 0/0 is NaN, which Spark orders ABOVE
-        # every number, so an unguarded `>= tau` would drop rows against
-        # zero vectors — the numpy kernel defines cos = 0 there instead
-        .filter(
-            (l2_norm(F.col("__xv")) != 0)
-            & (l2_norm(F.col("__yv")) != 0)
-            & (cosine(F.col("__xv"), F.col("__yv")) >= tau)
-        )
-        .select(F.col("__xid").alias(id_col))
-        .distinct()
-    )
-    out = (
-        assigned.join(dropped.withColumn("__drop", F.lit(True)), on=id_col, how="left")
-        .select(
-            id_col,
-            "cid",
-            F.coalesce(~F.col("__drop"), F.lit(True)).alias("kept"),
-        )
-    )
-    return attach_cleanup(out, assigned, upstream_cleanup)

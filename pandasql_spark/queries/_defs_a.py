@@ -1689,9 +1689,9 @@ def q67_repetition_signals(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Gopher-style repetition quality signals
     (operators/repetition.py): per-document bigram stats — total
     bigrams, top-bigram count, top-bigram fraction, duplicated-bigram
-    fraction. Gate runs the default impl="numpy" path: one Arrow-batched
-    mapInPandas scan, ZERO shuffles (the impl="hof" column-expression
-    path and the oracle's explode+groupBy shape cross-check it)."""
+    fraction. The operator is one Arrow-batched mapInPandas scan with
+    ZERO shuffles; the oracle's explode+groupBy shape is the
+    independent check."""
     from pandasql_spark.operators.repetition import repetition_signals
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
@@ -1805,8 +1805,9 @@ def q69_semantic_dedup(spark: SparkSession, sf: str) -> SparkDataFrame:
     then drop rows with a lower-id same-cluster neighbor at cosine
     ≥ 0.35. Every 100th vector is re-planted with id+100000 so the
     drop path is provably exercised (exact dups ⇒ same cell, cos 1.0).
-    The oracle unrolls both Lloyd iterations in SQL with the identical
-    left-to-right fold order (list_reduce ↔ aggregate())."""
+    The oracle unrolls both Lloyd iterations in SQL, folding distances
+    and cosines left to right with list_reduce; the engine's BLAS
+    kernels agree with it after the 6-decimal rounding."""
     from pandasql_spark.operators.semantic import semantic_dedup
 
     # project to the two columns the operator uses BEFORE the k-means
@@ -1898,8 +1899,8 @@ a3 AS (
   ) WHERE rn = 1
 ),
 dropped AS (
-  -- zero-norm guards mirror both Spark paths (numpy cos:=0 / expr
-  -- l2_norm != 0): a zero vector can never be "dropped", and DuckDB's
+  -- zero-norm guards mirror the Spark kernel (cos := 0 for a zero
+  -- vector): a zero vector can never be "dropped", and DuckDB's
   -- 0/0 = NaN would otherwise sort it above every number here
   SELECT x.vec_id
   FROM a3 x JOIN a3 y ON x.cid = y.cid AND y.vec_id < x.vec_id

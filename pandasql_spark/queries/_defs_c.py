@@ -992,7 +992,7 @@ def q89_quantize(spark: SparkSession, sf: str) -> SparkDataFrame:
     """Scalar int8-range embedding quantization audit
     (operators/quantize.py:quantization_report): per-vector affine
     min/max codes, dequantized reconstruction error, and an md5 over
-    the code array itself — all zero-shuffle higher-order functions.
+    the code array itself — one zero-shuffle Arrow-batched pass.
     The oracle recomputes codes, error, and the code fingerprint in
     SQL with the identical IEEE sequence (round-half-up on the
     non-negative affine image is engine-invariant), so the gate
@@ -1910,8 +1910,8 @@ def q100_bpe_pair_stats(spark: SparkSession, sf: str) -> SparkDataFrame:
     corpus. The post-limit rank window is 50 rows — single-partition
     by construction. Deterministic total order (count desc, pair asc)
     makes the k-boundary tie-safe. train_bpe/encode_bpe (the driver-
-    loop merge induction and the Arrow-batched encoder with the
-    fold-expression cross-check) are pytest-covered in test_bpe.py —
+    loop merge induction and the Arrow-batched encoder) are
+    pytest-covered in test_bpe.py against pure-Python references —
     iterative induction is not SQL-expressible, its seed statistic
     is."""
     from pandasql_spark.operators.bpe import pair_stats

@@ -1,7 +1,6 @@
 """BPE tokenizer induction (operators/bpe.py): pure-Python reference
-trainer differential, greedy-overlap fold semantics, encoder path
-equality (pandas memo == expression fold), and reconstruction /
-monotonicity invariants on the real corpus."""
+trainer and encoder differentials, greedy-overlap fold semantics, and
+reconstruction / monotonicity invariants on the real corpus."""
 
 from __future__ import annotations
 
@@ -58,6 +57,23 @@ def _ref_merge(syms, left, right):
     return tuple(out)
 
 
+def _ref_encode(text, merges):
+    """Document encoder built on _ref_merge: single-space words, empty
+    words dropped, every rule applied in learned order; NULL stays
+    NULL."""
+    if text is None:
+        return None
+    out = []
+    for w in text.split(" "):
+        if not w:
+            continue
+        syms = tuple(w)
+        for left, right in merges:
+            syms = _ref_merge(syms, left, right)
+        out.extend(syms)
+    return out
+
+
 def _ref_train_full(texts, n_merges):
     symfreq = {tuple(w): c for w, c in _ref_word_freq(texts).items()}
     merges = []
@@ -105,8 +121,7 @@ def test_non_bmp_codepoints(spark):
     assert train_bpe(_docs(spark, texts), n_merges=2) == _ref_train_full(texts, 2)
     m = [("🌊", "🌊")]
     a = {r.doc_id: r.bpe_tokens for r in encode_bpe(_docs(spark, texts), m).collect()}
-    b = {r.doc_id: r.bpe_tokens for r in encode_bpe(_docs(spark, texts), m, impl="expr").collect()}
-    assert a == b
+    assert a == {i: _ref_encode(t, m) for i, t in enumerate(texts)}
     assert a[1] == ["🌊🌊", "x"]
 
 
@@ -143,9 +158,10 @@ def test_greedy_overlap_semantics(spark):
 def test_encoder_paths_agree_on_corpus(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(30)
     merges = train_bpe(docs, n_merges=6)
-    a = encode_bpe(docs, merges, impl="pandas").select("doc_id", "bpe_tokens")
-    b = encode_bpe(docs, merges, impl="expr").select("doc_id", "bpe_tokens")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+    rows = encode_bpe(docs, merges).select("text", "bpe_tokens").collect()
+    assert rows
+    for r in rows:
+        assert r.bpe_tokens == _ref_encode(r.text, merges), r.text
 
 
 def test_encode_reconstructs_and_shrinks(spark):
@@ -186,8 +202,6 @@ def test_encode_null_and_empty(spark):
 def test_validation():
     with pytest.raises(ValueError, match="n_merges"):
         train_bpe(None, n_merges=-1)
-    with pytest.raises(ValueError, match="impl"):
-        encode_bpe(None, [], impl="nope")
 
 
 # --- pure-Python properties (no Spark; cheap at any example count) --------
@@ -237,8 +251,8 @@ def test_encoder_paths_agree_on_messy_whitespace(spark):
     )
     m = [("a", "b")]
     a = {r.doc_id: r.bpe_tokens for r in encode_bpe(df, m).collect()}
-    b = {r.doc_id: r.bpe_tokens for r in encode_bpe(df, m, impl="expr").collect()}
-    assert a == b == {0: [], 1: ["a", "b"], 2: ["ab"], 3: ["ab", "ab"]}
+    assert a == {0: [], 1: ["a", "b"], 2: ["ab"], 3: ["ab", "ab"]}
+    assert a == {i: _ref_encode(t, m) for i, t in enumerate(["", "a  b", " ab ", "ab  ab"])}
 
 
 @given(

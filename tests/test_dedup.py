@@ -358,10 +358,10 @@ def test_minhash_string_ids_numpy_path(corpus, spark):
     Arrow-crashing string-id callers on the default path)."""
     sdf, pdf = corpus
     named = sdf.withColumn("doc_id", F.concat(F.lit("doc-"), F.col("doc_id")))
-    sigs = dedup.minhash_signatures(named, impl="numpy").toPandas()
+    sigs = dedup.minhash_signatures(named).toPandas()
     assert sigs["id"].map(lambda s: s.startswith("doc-")).all()
     # signatures identical to the long-id run — id type is metadata only
-    base = dedup.minhash_signatures(sdf, impl="numpy").toPandas()
+    base = dedup.minhash_signatures(sdf).toPandas()
     base_map = {f"doc-{r.id}": list(r.signature) for r in base.itertuples()}
     for r in sigs.itertuples():
         assert list(r.signature) == base_map[r.id]

@@ -4,11 +4,11 @@ constant-vector exactness, and the zero-shuffle plan claim."""
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import numpy as np
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from pandasql_spark.operators.quantize import (
@@ -84,9 +84,26 @@ def test_zero_shuffle_plan(spark):
 
 
 def test_report_impls_bit_identical(spark):
+    """The Arrow report kernel against the expression path: code_fp is
+    the md5 of quantize_embeddings' comma-joined codes, max_abs_err the
+    dequantize_embeddings reconstruction error."""
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    a = sorted(map(tuple, quantization_report(e, impl="numpy").collect()))
-    b = sorted(map(tuple, quantization_report(e, impl="expr").collect()))
-    assert a == b
-    with pytest.raises(ValueError, match="impl"):
-        quantization_report(e, impl="arrow")
+    orig = {r["vec_id"]: np.array(r["embedding"], np.float64) for r in e.collect()}
+    q = {r["vec_id"]: r for r in quantize_embeddings(e).collect()}
+    deq = {
+        r["vec_id"]: np.array(r["embedding"], np.float64)
+        for r in dequantize_embeddings(quantize_embeddings(e)).collect()
+    }
+    rep = quantization_report(e).collect()
+    assert len(rep) == len(orig) > 0
+    for r in rep:
+        i = r["vec_id"]
+        codes = q[i]["codes"]
+        assert r["dim"] == len(codes)
+        assert r["lo"] == round(q[i]["lo"], 6)
+        assert r["scale"] == round(q[i]["scale"], 6)
+        assert r["code_fp"] == hashlib.md5(
+            ",".join(map(str, codes)).encode()
+        ).hexdigest()
+        err = float(np.abs(orig[i] - deq[i]).max())
+        assert r["max_abs_err"] == round(err, 6)

@@ -1,7 +1,7 @@
 """Repetition quality signals (operators/repetition.py) and PII
-hygiene (functions/pii.py): known-value checks, HOF-vs-explode
-equivalence, a Python-oracle property test, and the zero-shuffle plan
-guarantee the docstring claims."""
+hygiene (functions/pii.py): known-value checks, the kernel against a
+Python oracle (corpus-wide and as a property test), and the
+zero-shuffle plan guarantee the docstring claims."""
 
 from __future__ import annotations
 
@@ -60,19 +60,24 @@ def test_null_text_omitted_by_every_impl(spark):
     df = spark.createDataFrame(
         [(0, None), (1, "a b")], "doc_id long, text string"
     )
-    for impl in ("numpy", "hof", "explode"):
-        for n in (1, 2):
-            ids = {r.doc_id for r in repetition_signals(df, n=n, impl=impl).collect()}
-            assert ids == {1}, (impl, n)
+    for n in (1, 2):
+        ids = {r.doc_id for r in repetition_signals(df, n=n).collect()}
+        assert ids == {1}, n
 
 
 def test_all_impls_agree_on_corpus(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    a = repetition_signals(docs, n=2, impl="hof").sort("doc_id").collect()
-    b = repetition_signals(docs, n=2, impl="explode").sort("doc_id").collect()
-    c = repetition_signals(docs, n=2, impl="numpy").sort("doc_id").collect()
-    assert a == b == c
-    assert len(a) > 0
+    got = {
+        r.doc_id: (r.n_grams, r.top_gram_count, r.top_gram_frac, r.dup_gram_frac)
+        for r in repetition_signals(docs, n=2).collect()
+    }
+    expected = {
+        r.doc_id: sig
+        for r in docs.select("doc_id", "text").collect()
+        if r.text is not None and (sig := _py_signals(r.text, 2)) is not None
+    }
+    assert got == expected
+    assert len(got) > 0
 
 
 def test_numpy_kernel_string_ids(spark):
@@ -83,7 +88,7 @@ def test_numpy_kernel_string_ids(spark):
     )
     rows = {
         r.doc_id: r.n_grams
-        for r in repetition_signals(df, n=2, impl="numpy").collect()
+        for r in repetition_signals(df, n=2).collect()
     }
     assert rows == {"a": 3, "b": 2}
 
@@ -123,12 +128,11 @@ def test_filter_drops_repetitive_keeps_short(spark):
 
 def test_zero_shuffle_paths_have_no_exchange(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    for impl in ("hof", "numpy"):
-        plan = (
-            repetition_signals(docs, n=2, impl=impl)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "Exchange" not in plan, (impl, plan)
+    plan = (
+        repetition_signals(docs, n=2)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "Exchange" not in plan, plan
 
 
 def test_ngrams_edge_cases(spark):

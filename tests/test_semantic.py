@@ -1,8 +1,11 @@
 """SemDeDup semantic dedup (operators/semantic.py): clustering
 correctness on separable data, tie/empty-cell edges, the keep-lowest
-dedup rule, determinism, and the zero-shuffle assignment plan."""
+dedup rule, determinism, the zero-shuffle assignment plan, and the
+BLAS kernels against a left-to-right Python fold."""
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,6 +24,50 @@ def _vecs(spark, rows):
         [(i, [float(x) for x in v]) for i, v in rows],
         "vec_id long, embedding array<float>",
     )
+
+
+def _fold_reference(vecs, k, n_iter, tau):
+    """{id: (cid, kept)} by the q69 DuckDB oracle's recipe, folded left
+    to right in Python: lowest-id init, squared-distance argmin with
+    ties to the lowest cid, centroids rounded to 6 decimals (empty
+    cells carry forward), then drop x when a lower-id same-cell y has
+    round(cosine, 6) >= tau. Zero-norm rows are never dropped and never
+    drop another row."""
+    ids = sorted(vecs)
+    cents = [vecs[i] for i in ids[:k]]
+
+    def assign(cents):
+        out = {}
+        for i in ids:
+            d = [sum((a - b) * (a - b) for a, b in zip(vecs[i], c)) for c in cents]
+            out[i] = d.index(min(d))
+        return out
+
+    for _ in range(n_iter):
+        cid = assign(cents)
+        for c in range(k):
+            members = [vecs[i] for i in ids if cid[i] == c]
+            if members:
+                cents[c] = [
+                    round(sum(m[d] for m in members) / len(members), 6)
+                    for d in range(len(members[0]))
+                ]
+    cid = assign(cents)
+    norm = {i: math.sqrt(sum(x * x for x in vecs[i])) for i in ids}
+
+    def similar(x, y):
+        if norm[x] == 0 or norm[y] == 0:
+            return False
+        dot = sum(a * b for a, b in zip(vecs[x], vecs[y]))
+        return round(dot / (norm[x] * norm[y]), 6) >= tau
+
+    return {
+        x: (
+            cid[x],
+            not any(cid[y] == cid[x] and similar(x, y) for y in ids if y < x),
+        )
+        for x in ids
+    }
 
 
 def test_kmeans_separates_blobs(spark):
@@ -89,35 +136,34 @@ def test_planted_dups_dropped_on_real_corpus(spark):
 
 def test_numpy_pair_stage_matches_expr_fold(spark):
     # BLAS-order vs fold-order arithmetic, in BOTH the assignment and
-    # the pair stage: verdicts must agree on the full corpus incl.
-    # planted exact dups
+    # the pair stage: verdicts must agree with the Python fold on the
+    # full corpus incl. planted exact dups
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     planted = e.filter(F.col("vec_id") % 50 == 0).withColumn(
         "vec_id", F.col("vec_id") + 100000
     )
-    corpus = e.unionByName(planted)
-    a = sorted(map(tuple, semantic_dedup(
-        corpus, k=4, n_iter=2, tau=0.35, impl="numpy", assign_impl="numpy"
-    ).collect()))
-    b = sorted(map(tuple, semantic_dedup(
-        corpus, k=4, n_iter=2, tau=0.35, impl="expr", assign_impl="expr"
-    ).collect()))
-    assert a == b
+    corpus = e.unionByName(planted).select("vec_id", "embedding")
+    vecs = {r.vec_id: [float(x) for x in r.embedding] for r in corpus.collect()}
+    got = {
+        r.vec_id: (r.cid, r.kept)
+        for r in semantic_dedup(corpus, k=4, n_iter=2, tau=0.35).collect()
+    }
+    assert got == _fold_reference(vecs, k=4, n_iter=2, tau=0.35)
+    assert not all(kept for _, kept in got.values())
 
 
 def test_zero_norm_vectors_never_dropped_either_impl(spark):
-    # cosine vs a zero vector is NaN in the fold (Spark orders NaN above
-    # every number) and defined-0 in numpy — both impls must KEEP
+    # cosine vs a zero vector is 0/0; the kernel defines it as 0, so
+    # zero vectors are KEPT and never drop another row
     df = _vecs(
         spark,
         [(0, [0.0, 0.0]), (1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [1.0, 0.0])],
     )
-    for impl in ("numpy", "expr"):
-        out = {
-            r.vec_id: r.kept
-            for r in semantic_dedup(df, k=1, n_iter=0, tau=0.5, impl=impl).collect()
-        }
-        assert out == {0: True, 1: True, 2: True, 3: False}, impl
+    out = {
+        r.vec_id: r.kept
+        for r in semantic_dedup(df, k=1, n_iter=0, tau=0.5).collect()
+    }
+    assert out == {0: True, 1: True, 2: True, 3: False}
 
 
 def test_dedup_string_ids(spark):
@@ -140,8 +186,6 @@ def test_property_vs_python_bruteforce(spark):
     """Full-pipeline differential on random small corpora: Python
     re-implements init/assign/update/dedup with the same quantization
     and tie rules; verdicts must match exactly."""
-    import math
-
     import numpy as np
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
@@ -170,44 +214,8 @@ def test_property_vs_python_bruteforce(spark):
     )
     def inner(data, k, tau):
         rows = [(i, list(v)) for i, v in enumerate(data)]
-        # Python oracle
         vecs = {i: [float(np.float32(x)) for x in v] for i, v in rows}
-        cents = [vecs[i] for i in sorted(vecs)[:k]]
-
-        def assign(c):
-            out = {}
-            for i, v in vecs.items():
-                dists = [sum((a - b) * (a - b) for a, b in zip(v, cc)) for cc in c]
-                out[i] = dists.index(min(dists))
-            return out
-
-        for _ in range(2):
-            a = assign(cents)
-            new = []
-            for ci in range(k):
-                members = [vecs[i] for i in a if a[i] == ci]
-                if members:
-                    new.append([
-                        round(sum(m[d] for m in members) / len(members), 6)
-                        for d in range(3)
-                    ])
-                else:
-                    new.append(cents[ci])
-            cents = new
-        a = assign(cents)
-
-        def cos(u, v):
-            nu = math.sqrt(sum(x * x for x in u)) or 1.0
-            nv = math.sqrt(sum(x * x for x in v)) or 1.0
-            return round(sum(x * y for x, y in zip(u, v)) / (nu * nv), 6)
-
-        expected = {}
-        for i in sorted(vecs):
-            dropped = any(
-                a[j] == a[i] and cos(vecs[i], vecs[j]) >= tau
-                for j in vecs if j < i
-            )
-            expected[i] = (a[i], not dropped)
+        expected = _fold_reference(vecs, k=k, n_iter=2, tau=tau)
 
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         got = {
