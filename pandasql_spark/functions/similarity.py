@@ -156,7 +156,7 @@ def cosine_topk_pairs(
     ).limit(k)
     from ..operators.cache import attach_cleanup
 
-    return attach_cleanup(out, getattr(pairs, "cleanup", lambda **_: None))
+    return attach_cleanup(out, pairs)
 
 
 def random_projection_buckets(

@@ -271,12 +271,12 @@ def tfidf_top_terms(
     """
     from pyspark.sql.window import Window
 
-    from ..operators.cache import attach_cleanup, tracked_local_checkpoint
+    from ..operators.cache import attach_cleanup, barrier
 
     n_docs = df.count()
     tok = df.select(F.col(id_col).alias("id"), F.explode(tokens(text_col)).alias("term"))
     tf = tok.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf, release = tracked_local_checkpoint(tf, eager=False)
+    tf = barrier(tf)
     dfq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_ct"))
     scored = tf.join(dfq, "term").select(
         "id",
@@ -293,4 +293,4 @@ def tfidf_top_terms(
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
-    return attach_cleanup(out, release)
+    return attach_cleanup(out, tf)

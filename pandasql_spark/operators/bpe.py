@@ -13,9 +13,10 @@ pipeline, and its distributed shape is classic two-level:
    counts via an index-sequence explode (JVM-side, no Python), a
    1-row argmax collect (the merge rule IS driver state — that is the
    algorithm, not a shortcut), and a greedy left-to-right pair fusion
-   expressed as an ``F.aggregate`` fold. ``localCheckpoint`` every
-   few iterations truncates the growing lineage — the standard
-   iterative-algorithm recipe (GraphX does the same).
+   expressed as an ``F.aggregate`` fold. An eager lineage ``barrier``
+   (operators/cache.py) every few iterations truncates the growing
+   lineage — the standard iterative-algorithm recipe (GraphX does the
+   same) — and releases the round it supersedes.
 
 The greedy fold is exact: scanning symbols left to right, fuse when
 the accumulated tail equals ``a`` and the next symbol is ``b``. A
@@ -47,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from ..functions.text import tokens
+from .cache import barrier
 
 __all__ = [
     "word_freq",
@@ -160,30 +162,37 @@ def train_bpe(
     stays distributed on the vocabulary-sized word table."""
     if n_merges < 0:
         raise ValueError(f"n_merges must be >= 0, got {n_merges}")
-    words = (
-        word_freq(df, text_col)
-        .select(_codepoints(F.col("w")).alias("syms"), "cnt")
-        .localCheckpoint()  # eager: corpus scanned once, here
+    # eager: corpus scanned once, here
+    cut = words = barrier(
+        word_freq(df, text_col).select(
+            _codepoints(F.col("w")).alias("syms"), "cnt"
+        ),
+        eager=True,
     )
     merges: list[tuple[str, str]] = []
-    for i in range(n_merges):
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
-            .limit(1)
-            .collect()
-        )
-        if not top:  # vocabulary fully fused
-            break
-        left, right = top[0]["left"], top[0]["right"]
-        merges.append((left, right))
-        words = words.select(
-            _merge_fold(F.col("syms"), left, right).alias("syms"), "cnt"
-        )
-        if (i + 1) % checkpoint_every == 0:
-            # superseded checkpoints' blocks are reclaimed by the
-            # ContextCleaner once the old frame goes out of scope
-            words = words.localCheckpoint()
+    try:
+        for i in range(n_merges):
+            top = (
+                _pair_counts(words)
+                .orderBy(F.desc("pair_count"), F.asc("left"), F.asc("right"))
+                .limit(1)
+                .collect()
+            )
+            if not top:  # vocabulary fully fused
+                break
+            left, right = top[0]["left"], top[0]["right"]
+            merges.append((left, right))
+            words = words.select(
+                _merge_fold(F.col("syms"), left, right).alias("syms"), "cnt"
+            )
+            if (i + 1) % checkpoint_every == 0:
+                words = barrier(words, eager=True)
+                # the eager barrier was the superseded round's last read
+                cut.cleanup()
+                cut = words
+    finally:
+        # the merge table is driver-side: the last round is dead on return
+        cut.cleanup()
     return merges
 
 

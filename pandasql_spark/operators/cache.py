@@ -1,81 +1,58 @@
-"""Cleanup hooks for operator-internal persisted frames.
+"""Lineage barriers and cleanup hooks for operator-internal frames.
 
-Several operators persist an intermediate that feeds multiple plan
-branches (MinHash signature tables, range-partitioned ranking inputs).
-The result is lazy, so there is no safe unpersist point INSIDE the
-operator — but once the caller has materialized or written the result,
-the cache is dead weight in the storage pool. ``attach_cleanup`` gives
-the returned DataFrame an explicit ``result.cleanup()`` for exactly that
-moment; callers that skip it still fall back to Spark's LRU eviction.
+Two primitives, one release protocol:
+
+- ``barrier(df, eager=False)`` is the ONE way an operator cuts lineage
+  (iterative rounds, self-joining stages, multi-epoch training). It
+  returns ``df.localCheckpoint(eager)`` with its own
+  ``cleanup(blocking=False)`` releasing the checkpoint's persisted
+  blocks. Releasing makes the frame UNRECOMPUTABLE (lineage was
+  truncated): materialize everything that reads it first.
+- ``attach_cleanup(result, *frames)`` gives a lazy result an explicit
+  ``result.cleanup(blocking=False)`` for the moment the caller has
+  materialized or written it. Entries are frames only: each entry's own
+  ``cleanup`` runs first (so hooks compose through pipelines like
+  ``dedup_corpus``), then the entry is unpersisted. Callers that skip
+  cleanup still fall back to Spark's LRU eviction.
 """
 
 from __future__ import annotations
 
-import inspect
-
 from pyspark.sql import DataFrame
 
 
-def _accepts_blocking(fn) -> bool:
-    """True when ``fn(blocking=...)`` is a valid call — a KEYWORD-pass
-    able ``blocking`` parameter or ``**kwargs``. A positional-only or
-    ``*args`` parameter that merely happens to be NAMED blocking does
-    not count (calling it by keyword would raise the very signature
-    TypeError this probe exists to avoid — r17 review). Unsignaturable
-    callables (some builtins) conservatively get the zero-arg call."""
-    try:
-        params = inspect.signature(fn).parameters
-    except (TypeError, ValueError):
-        return False
-    p = params.get("blocking")
-    if p is not None and p.kind in (
-        inspect.Parameter.POSITIONAL_OR_KEYWORD,
-        inspect.Parameter.KEYWORD_ONLY,
-    ):
-        return True
-    return any(
-        q.kind is inspect.Parameter.VAR_KEYWORD for q in params.values()
-    )
-
-
-def attach_cleanup(result: DataFrame, *cached) -> DataFrame:
+def attach_cleanup(result: DataFrame, *frames: DataFrame) -> DataFrame:
     """Attach ``result.cleanup(blocking=False)`` releasing every frame in
-    ``cached``. Entries may be DataFrames to unpersist or callables
-    (e.g. an upstream result's own ``cleanup``), so hooks compose
-    through operator pipelines like ``dedup_corpus``. The blocking flag
-    propagates through composed callables too — a hook that can't take
-    it (zero-arg lambda) degrades to its own default (ADVICE r16)."""
+    ``frames``: the frame's own ``cleanup`` when it carries one, then its
+    ``unpersist``. The blocking flag reaches both."""
 
     def cleanup(blocking: bool = False) -> None:
-        for c in cached:
-            if callable(getattr(c, "unpersist", None)):
-                c.unpersist(blocking=blocking)
-            elif callable(c):
-                # signature probe, not try/except TypeError: a TypeError
-                # raised INSIDE the hook must not trigger a second call
-                if _accepts_blocking(c):
-                    c(blocking=blocking)
-                else:
-                    c()
+        for f in frames:
+            # instance attribute only: DataFrame.__getattr__ would hand
+            # back a Column for a column that happens to be named cleanup
+            own = vars(f).get("cleanup")
+            if own is not None:
+                own(blocking=blocking)
+            f.unpersist(blocking=blocking)
 
     result.cleanup = cleanup
     return result
 
 
-def tracked_local_checkpoint(df: DataFrame, eager: bool = True):
-    """``df.localCheckpoint(eager)`` plus a zero-arg release handle for
-    its persisted blocks — which plain ``DataFrame.unpersist()`` cannot
-    reach (the blocks belong to an internal RDD, not the plan cache).
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint(eager)`` carrying ``cleanup(blocking=False)``
+    that releases its persisted blocks — which plain
+    ``DataFrame.unpersist()`` cannot reach (the blocks belong to an
+    internal RDD, not the plan cache).
 
-    Found by persistent-RDD id diff around the checkpoint call — valid
-    for ``eager=False`` too: Spark registers the checkpoint RDD in the
-    persistent-RDD registry at MARK time (persist() runs inside
-    localCheckpoint()), even though its blocks materialize on first
-    compute (probed on 4.1). Single-driver-thread operators only — a
-    concurrent persist landing in the diff window would be captured
-    too. Releasing makes the checkpointed frame UNRECOMPUTABLE
-    (lineage was truncated), so only release a round that nothing
-    downstream will read again."""
+    The blocks are found by persistent-RDD id diff around the checkpoint
+    call — valid for ``eager=False`` too: Spark registers the checkpoint
+    RDD in the persistent-RDD registry at MARK time (persist() runs
+    inside localCheckpoint()), even though its blocks materialize on
+    first compute (probed on 4.1). Single-driver-thread operators only —
+    a concurrent persist landing in the diff window would be captured
+    too. After ``cleanup()`` the frame is unrecomputable, so only release
+    a barrier that nothing downstream will read again."""
     sc = df.sparkSession.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     out = df.localCheckpoint(eager=eager)
@@ -83,11 +60,12 @@ def tracked_local_checkpoint(df: DataFrame, eager: bool = True):
         i for i in sc._jsc.getPersistentRDDs().keySet().toArray() if i not in before
     ]
 
-    def release(blocking: bool = False) -> None:
+    def cleanup(blocking: bool = False) -> None:
         cur = sc._jsc.getPersistentRDDs()
         for i in new_ids:
             r = cur.get(i)
             if r is not None:
                 r.unpersist(blocking)
 
-    return out, release
+    out.cleanup = cleanup
+    return out

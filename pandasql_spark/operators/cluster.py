@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cache import attach_cleanup, tracked_local_checkpoint
+from .cache import attach_cleanup, barrier
 
 
 def connected_components(
@@ -47,13 +47,15 @@ def connected_components(
     are unrecoverable once dropped. ``result.cleanup()`` releases them
     after the caller materializes."""
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    sym, release_sym = tracked_local_checkpoint(
-        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    sym = barrier(
+        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b"))),
+        eager=True,
     )
 
-    labels, release_labels = tracked_local_checkpoint(
+    labels = barrier(
         sym.select(F.col("a").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
+        .withColumn("label", F.col("node")),
+        eager=True,
     )
 
     converged = False
@@ -63,11 +65,12 @@ def connected_components(
             sym.join(labels, sym["b"] == labels["node"])
             .select(F.col("a").alias("node"), "label")
         )
-        new_labels, release_new = tracked_local_checkpoint(
+        new_labels = barrier(
             labels.unionByName(neighbor_labels)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label")),
             # lineage cut — see module docstring
+            eager=True,
         )
         changed = (
             new_labels.alias("n")
@@ -76,24 +79,24 @@ def connected_components(
             .count()
         )
         # the changed-count was this round's last read of the OLD labels
-        release_labels()
-        labels, release_labels = new_labels, release_new
+        labels.cleanup()
+        labels = new_labels
         if changed == 0:
             converged = True
             break
     if not converged:
         # silent non-convergence would return WRONG cluster ids (a long
         # chain's min label travels one hop per round) — fail loudly,
-        # releasing the tracked checkpoints first (no cleanup handle
-        # escapes to the caller on the raise path).
-        release_sym(blocking=True)
-        release_labels(blocking=True)
+        # releasing the barriers first (no cleanup handle escapes to
+        # the caller on the raise path).
+        sym.cleanup(blocking=True)
+        labels.cleanup(blocking=True)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} iterations "
             "(label-graph diameter exceeds max_iter); raise max_iter"
         )
     out = labels.select("node", F.col("label").alias("cluster_id"))
-    return attach_cleanup(out, release_sym, release_labels)
+    return attach_cleanup(out, sym, labels)
 
 
 def dedup_keep_representative(

@@ -43,16 +43,16 @@ k such stages lazily multiplies the upstream plan ~4× per stage —
 measured 4 → 16 → 64 → 256 base-table scans for 0 → 3 optional stages
 on top of dedup. At 100 TB that is the difference between a pipeline
 and a non-terminating job. `curate_corpus` therefore inserts a lazy
-``localCheckpoint(eager=False)`` barrier before each self-joining
-stage (``barrier=False`` restores raw lazy composition): each stage's
-input materializes exactly once and every downstream reference reuses
-it — scans stay LINEAR in stage count. localCheckpoint over persist
+lineage ``barrier`` (operators/cache.py: a non-eager localCheckpoint)
+before each self-joining stage: each stage's input materializes exactly
+once and every downstream reference reuses it — scans stay LINEAR in
+stage count. localCheckpoint over persist
 is a MEASURED choice, not a stylistic one: lazy persist fails to
 deduplicate these chained self-joins (6.2 s / 129-scan plan vs 0.24 s
 / 0 at sf0.001 with three optional stages). The cost is truncated
 lineage — an executor loss fails the job and it reruns — which still
-beats 4^k recompute; cluster runs needing per-stage durability should
-pass ``barrier=False`` and materialize between stages to a table.
+beats 4^k recompute. ``result.cleanup()`` releases every barrier; the
+result is not recomputable afterwards.
 
 Reference scope note: beyond-reference surface; the reference engine
 has no curation pipeline.
@@ -64,7 +64,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, token_count
-from .cache import attach_cleanup, tracked_local_checkpoint
+from .cache import attach_cleanup, barrier
 from .contamination import contaminated_docs
 from .sampling import resample_to_mixture
 
@@ -96,7 +96,6 @@ def curate_corpus(
     quality_normalize: bool = True,
     quality_n_buckets: int = 1 << 18,
     unicode_normalize: bool = False,
-    barrier: bool = True,
 ) -> DataFrame:
     """Quality-gate, dedup, decontaminate, and (optionally) redact and
     resample a document corpus; returns surviving rows with the input
@@ -156,17 +155,12 @@ def curate_corpus(
         # stages: 6.2 s and a 129-scan plan vs localCheckpoint's
         # 0.24 s and 0), so the fault-tolerance tradeoff is real but
         # one-sided: truncated lineage means an executor loss fails
-        # the job (rerun), which beats 4^k recompute every time. A
-        # cluster run needing per-stage durability should pass
-        # barrier=False and materialize between stages to a table —
-        # the standard multi-pass pattern. Each barrier's checkpoint
-        # RDD is tracked so result.cleanup() can unpersist the
+        # the job (rerun), which beats 4^k recompute every time. Each
+        # barrier is kept so result.cleanup() can release the
         # intermediates once the result is materialized (ADVICE r11:
         # checkpointed blocks otherwise stay resident until driver GC).
-        if not barrier:
-            return d
-        out, release = tracked_local_checkpoint(d, eager=False)
-        releases.append(release)
+        out = barrier(d)
+        releases.append(out)
         return out
 
     if unicode_normalize:
@@ -206,7 +200,7 @@ def curate_corpus(
 
         out = _barrier(out)
         scored = unigram_logprob_scores(out, text_col=text_col, id_col=id_col)
-        releases.append(getattr(scored, "cleanup", lambda: None))
+        releases.append(scored)
         ok = (
             scored.filter(F.col("logprob") >= min_logprob)
             .select(id_col)

@@ -616,7 +616,7 @@ def dedup_corpus(
     # compose the inner stages' releases (survivor-id cache, signature
     # cache, the component loop's final checkpoints) into this result's
     # hook (operators/cache.py) — call only after materializing
-    return attach_cleanup(out, exact_keep, pairs.cleanup, clusters.cleanup)
+    return attach_cleanup(out, exact_keep, pairs, clusters)
 
 
 # ------------------------------------------------------------------ SimHash
@@ -1417,9 +1417,7 @@ def dedup_images(
     # compose the survivor-id cache and the component loop's final
     # checkpoint releases (previously dropped — the comp blocks leaked
     # until session end); call cleanup() only after materializing
-    return attach_cleanup(
-        out, exact_keep, getattr(comp, "cleanup", lambda: None)
-    )
+    return attach_cleanup(out, exact_keep, comp)
 
 
 # ------------------------------------------------------ embedding near-dup
@@ -1629,9 +1627,7 @@ def dedup_embeddings(
         non_reps = clusters.join(
             reps, clusters["node"] == reps["__rep"], "left_anti"
         ).select(F.col("node").alias(id_col))
-    return attach_cleanup(
-        df.join(non_reps, id_col, "anti"), pairs.cleanup, clusters.cleanup
-    )
+    return attach_cleanup(df.join(non_reps, id_col, "anti"), pairs, clusters)
 
 
 def line_dedup(

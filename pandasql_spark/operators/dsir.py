@@ -244,7 +244,7 @@ def dsir_select(
         # persisted target bucket table unreleasable (r16 review)
         return attach_cleanup(
             w.orderBy(F.col("logweight").desc(), F.col(id_col)).limit(k),
-            w.cleanup,
+            w,
         )
     if temperature <= 0:
         raise ValueError(f"temperature must be > 0, got {temperature}")
@@ -265,7 +265,7 @@ def dsir_select(
         .orderBy(F.col("__gk").desc(), F.col(id_col))
         .limit(k)
         .drop("__gk"),
-        w.cleanup,
+        w,
     )
 
 

@@ -220,7 +220,6 @@ def perplexity_buckets(
     text_col: str = "text",
     id_col: str = "doc_id",
     labels: tuple = ("head", "middle", "tail"),
-    barrier: bool = True,
     attach_input: bool = True,
 ) -> DataFrame:
     """CCNet-style corpus partition by LM quality (Wenzek et al. 2020:
@@ -254,14 +253,14 @@ def perplexity_buckets(
     full-corpus shuffle-or-broadcast of every payload column, paid for
     nothing (ADVICE r13).
 
-    ``barrier`` (default True) localCheckpoints the slim
+    A lineage barrier (operators/cache.py) checkpoints the slim
     (id, stratum, logprob) frame before the quantile stage — without
     it Catalyst re-derives the whole scoring subtree (three corpus
     scans + two shuffles) once for the cut points and once for the
     assignment (the curation.py 4^k lesson, measured on q16's plan:
     9 → 6 parquet scans). The checkpointed frame is 2 narrow columns
-    + the key; the returned frame carries ``result.cleanup()``
-    (operators/cache.py) to release the blocks once materialized.
+    + the key; the returned frame carries ``result.cleanup()`` to
+    release the blocks once materialized (not recomputable after).
 
     Oracle status: driver-gated since r13 via the q16 doc-profile fold
     (queries/_defs_a.py — logprob + ppl_tier + ppl_bucket columns;
@@ -275,16 +274,15 @@ def perplexity_buckets(
         raise ValueError(
             f"labels must have n_buckets={n_buckets} entries, got {len(labels)}"
         )
-    from .cache import attach_cleanup, tracked_local_checkpoint
+    from .cache import attach_cleanup, barrier
     from .ranking import quantile_normalize
 
     scored = unigram_logprob_scores(df, text_col=text_col, id_col=id_col)
-    slim = df.select(id_col, stratum_col).join(
-        scored.select(id_col, "logprob"), id_col, "left"
+    slim = barrier(
+        df.select(id_col, stratum_col).join(
+            scored.select(id_col, "logprob"), id_col, "left"
+        )
     )
-    release = None
-    if barrier:
-        slim, release = tracked_local_checkpoint(slim, eager=False)
     q = quantile_normalize(
         slim, "logprob", [stratum_col], k=n_buckets, out_col="__pct"
     )
@@ -302,8 +300,5 @@ def perplexity_buckets(
         .select(id_col, "logprob", "ppl_tier", "ppl_bucket")
     )
     out = df.join(tiers, id_col, "left") if attach_input else tiers
-    # compose the scorer's counts-cache release with our own barrier's
-    scored_release = getattr(scored, "cleanup", lambda blocking=False: None)
-    if release is not None:
-        return attach_cleanup(out, release, scored_release)
-    return attach_cleanup(out, scored_release)
+    # compose our own barrier's release with the scorer's counts cache
+    return attach_cleanup(out, slim, scored)

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .cache import attach_cleanup, tracked_local_checkpoint
+from .cache import attach_cleanup, barrier
 from .ranking import with_global_running_sum
 
 
@@ -91,7 +91,7 @@ def pack_chunks(
     )
     # pass through the running sum's persisted-frame release hook
     # (operators/cache.py contract) — call once materialized
-    return attach_cleanup(result, ranked.cleanup)
+    return attach_cleanup(result, ranked)
 
 
 def chunk_utilization(packed: DataFrame, chunk_tokens: int) -> DataFrame:
@@ -179,7 +179,6 @@ def pack_bpe_corpus(
     chunk_tokens: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    barrier: bool = True,
 ) -> DataFrame:
     """Text corpus → fixed-length training sequences in one call: BPE-
     encode every document with the (driver-held) merge table
@@ -202,11 +201,9 @@ def pack_bpe_corpus(
     The barrier TRUNCATES lineage — the curate_corpus caveat applies
     verbatim: under executor loss the checkpointed encode is
     unrecomputable and the job fails for a rerun (still cheaper than
-    re-encoding per downstream reference); a cluster run needing
-    per-stage durability should pass ``barrier=False`` and materialize
-    the encode to a table between stages. ``result.cleanup()`` releases
+    re-encoding per downstream reference). ``result.cleanup()`` releases
     the checkpointed blocks once the packed output is materialized
-    (ADVICE r11)."""
+    (ADVICE r11); the result is not recomputable afterwards."""
     from .bpe import encode_bpe
 
     if chunk_tokens < 1:
@@ -216,12 +213,9 @@ def pack_bpe_corpus(
         F.col("bpe_tokens"),
         F.size("bpe_tokens").cast("long").alias("__nt"),
     )
-    releases = []
-    if barrier:
-        # tracked so result.cleanup() can release the checkpointed
-        # encode once the packed output is materialized (ADVICE r11)
-        enc, rel = tracked_local_checkpoint(enc, eager=False)
-        releases.append(rel)
+    # result.cleanup() releases the checkpointed encode once the packed
+    # output is materialized (ADVICE r11)
+    enc = barrier(enc)
     assign = pack_chunks(enc, chunk_tokens, token_col="__nt", id_col=id_col)
     # Re-attach the chunk plan to the token payload with a SHUFFLED HASH
     # join built on the ASSIGN (metadata) side. Left to its estimates,
@@ -261,4 +255,4 @@ def pack_bpe_corpus(
         "tokens",
         F.size("tokens").cast("long").alias("n_tokens"),
     )
-    return attach_cleanup(result, assign.cleanup, *releases)
+    return attach_cleanup(result, assign, enc)

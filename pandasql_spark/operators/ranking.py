@@ -253,7 +253,7 @@ def exact_percentiles(
         F.explode(F.element_at(qs_for_rank, F.col(_RN).cast("long"))).alias("q"),
         F.col(value_col).alias("value"),
     )
-    return attach_cleanup(out, ranked.cleanup)
+    return attach_cleanup(out, ranked)
 
 
 def grouped_exact_percentiles(
@@ -345,7 +345,7 @@ def exact_ntile(
     out = ranked.withColumn(
         bucket_col, ntile_bucket(F.col(_RN), total, n)
     ).drop(_RN)
-    return attach_cleanup(out, ranked.cleanup)
+    return attach_cleanup(out, ranked)
 
 
 def quantile_normalize(

@@ -102,7 +102,7 @@ def corpus_report(
         )
         out = out.unionByName(mix)
 
-    cleanups = [pctl.cleanup, lambda **kw: base.unpersist()]
+    cleanups = [pctl, base]
     if audio_col is not None:
         from .multimodal import audio_meta
 
@@ -118,7 +118,7 @@ def corpus_report(
             "media_id", "decode_ok", "duration_s", "rms"
         ).persist()
         am.count()
-        cleanups.append(lambda **kw: am.unpersist())
+        cleanups.append(am)
         avol = am.agg(
             F.sum(F.col("decode_ok").cast("double")).alias("n_audio_ok"),
             F.round(1 - F.avg(F.col("decode_ok").cast("double")), 6).alias(
@@ -147,7 +147,7 @@ def corpus_report(
                 F.col("value").cast("double").alias("value"),
             )
         )
-        cleanups.append(apctl.cleanup)
+        cleanups.append(apctl)
 
         if stratum_col is not None:
             # (id, stratum) comes off the persisted text base — joining
@@ -177,8 +177,4 @@ def corpus_report(
     # copies could never be unpersisted by the caller
     from .cache import attach_cleanup
 
-    def _cleanup(**kw):
-        for c in cleanups:
-            c(**kw)
-
-    return attach_cleanup(out, _cleanup)
+    return attach_cleanup(out, *cleanups)

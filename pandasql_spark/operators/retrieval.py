@@ -35,6 +35,8 @@ from pyspark.sql import functions as F
 
 from pandasql_spark.functions.text import tokens
 
+from .cache import attach_cleanup, barrier
+
 
 def bm25_scores(
     df: DataFrame,
@@ -43,7 +45,6 @@ def bm25_scores(
     id_col: str = "doc_id",
     k1: float = 1.2,
     b: float = 0.75,
-    barrier: bool = True,
 ) -> DataFrame:
     """Score every document matching ≥1 query term.
 
@@ -54,24 +55,22 @@ def bm25_scores(
 
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
 
-    ``barrier`` (default True) localCheckpoints the query-pruned
+    A lineage barrier (operators/cache.py) checkpoints the query-pruned
     (doc, term, tf) table so the df-count branch and the scoring join
-    share one computation — see the inline note; barrier=False keeps
-    the full lineage (plan-inspection / debugging shape) at the cost
-    of a second corpus scan for the df counts.
+    share one computation — see the inline note; without it the df
+    counts cost a second corpus scan.
 
-    Cleanup contract (ADVICE r14): with ``barrier=True`` the returned
-    frame's ``cleanup()`` releases a localCheckpoint, which TRUNCATED
-    lineage — unlike the persist-backed cleanups elsewhere, the frame
-    is NOT recomputable after ``cleanup()``: re-executing it fails
+    Cleanup contract (ADVICE r14): the returned frame's ``cleanup()``
+    releases a localCheckpoint, which TRUNCATED lineage — unlike the
+    persist-backed cleanups elsewhere, the frame is NOT recomputable
+    after ``cleanup()``: re-executing it fails
     with a checkpoint-block-not-found error once the async unpersist
     lands (immediately under ``cleanup(blocking=True)``), and an
     executor loss before release has no lineage fallback either
     (acceptable here: the checkpointed table is query-pruned and the
     operator is a terminal scoring pass — rerun the OPERATOR, not the
-    frame). Materialize (collect/write) BEFORE calling cleanup(); if
-    recomputation safety matters, use ``barrier=False``. Pinned in
-    test_retrieval.py.
+    frame). Materialize (collect/write) BEFORE calling cleanup().
+    Pinned in test_retrieval.py.
     """
     terms = list(dict.fromkeys(query_terms))
     if not terms:
@@ -115,11 +114,7 @@ def bm25_scores(
     # reading the executed plan; plan-pinned in test_retrieval.py).
     # The checkpointed frame is the QUERY-PRUNED (doc, term) table —
     # proportional to matching documents, never the corpus.
-    from .cache import attach_cleanup, tracked_local_checkpoint
-
-    release = None
-    if barrier:
-        tf, release = tracked_local_checkpoint(tf, eager=False)
+    tf = barrier(tf)
     dfq = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df_ct"))
 
     n = F.lit(float(n_docs))
@@ -138,7 +133,7 @@ def bm25_scores(
             F.round(F.sum(per_term), 6).alias("bm25"),
         )
     )
-    return attach_cleanup(out, release) if release is not None else out
+    return attach_cleanup(out, tf)
 
 
 def bm25_topk(

@@ -185,7 +185,7 @@ def sample_exact_global(df: DataFrame, n: int, id_col: str) -> DataFrame:
     )
     out = ranked.filter(F.col("__srank") <= n).drop("__srank", "__skey")
     # pass through the ranking recipe's persisted-frame release hook
-    return attach_cleanup(out, ranked.cleanup)
+    return attach_cleanup(out, ranked)
 
 
 def hash_split(

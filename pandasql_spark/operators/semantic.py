@@ -262,5 +262,5 @@ def semantic_dedup(
 
     return attach_cleanup(
         assigned.groupBy("cid").applyInPandas(kernel, out_schema),
-        getattr(assigned, "cleanup", lambda: None),
+        assigned,
     )

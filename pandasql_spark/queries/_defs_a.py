@@ -791,7 +791,7 @@ def q10_embedding_neardup(spark: SparkSession, sf: str) -> SparkDataFrame:
             F.lit(None).cast("double").alias("cos_sim"),
         )
     )
-    return attach_cleanup(out, pairs.cleanup, surv.cleanup)
+    return attach_cleanup(out, pairs, surv)
 
 
 Q10_SQL = """

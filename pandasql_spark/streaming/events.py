@@ -94,7 +94,7 @@ def stage_ordered_chunks(
     # the write fully materialized the staged frame — release the
     # range-partitioned copy exact_ntile persisted internally (ADVICE
     # r10: bounded cache residency, same theme as the r9 items)
-    getattr(chunked, "cleanup", lambda: None)()
+    chunked.cleanup()
     for i in range(1, n_batches + 1):
         d = os.path.join(stage_dir, f"chunk={i}")
         part = (

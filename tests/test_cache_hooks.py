@@ -103,7 +103,7 @@ def test_stage_ordered_chunks_releases_ntile_persist(spark, tmp_path):
 
 
 def test_curation_barrier_cleanup(spark):
-    """ADVICE r11 item 2: curate_corpus(barrier=True) tracks every
+    """ADVICE r11 item 2: curate_corpus tracks every
     lazily-checkpointed barrier; result.cleanup() releases them all —
     repeated pipeline calls in one session no longer accumulate
     resident corpus copies."""
@@ -193,63 +193,79 @@ def test_session_cache_swap_and_dead_session_finalizer(spark):
 
 
 def test_cleanup_propagates_blocking_through_composed_hooks(spark):
-    """ADVICE r16: composed callables receive the blocking flag when
-    their signature can take it; legacy zero-arg hooks still run."""
+    """Entries are frames: a frame carrying its own cleanup receives the
+    blocking flag, then every entry is unpersisted with it — a
+    persisted entry is really released."""
     from pandasql_spark.operators.cache import attach_cleanup
 
     seen = []
 
-    def hook(blocking=False):
-        seen.append(blocking)
+    def spy(name, frame):
+        orig = frame.unpersist
 
-    def kw_hook(**kw):
-        seen.append(kw.get("blocking"))
+        def unpersist(blocking=False):
+            seen.append((name, blocking))
+            return orig(blocking=blocking)
 
-    def legacy_hook():
-        seen.append("legacy")
+        frame.unpersist = unpersist
+        return frame
 
-    out = attach_cleanup(spark.range(1), hook, kw_hook, legacy_hook)
+    hooked = spy("hooked", spark.range(1))
+    hooked.cleanup = lambda blocking=False: seen.append(("own", blocking))
+    cached = spy("cached", spark.range(7).persist())
+    cached.count()
+    assert cached.storageLevel.useMemory
+
+    out = attach_cleanup(spark.range(1), hooked, cached)
     out.cleanup(blocking=True)
-    assert seen == [True, True, "legacy"]
+    assert seen == [("own", True), ("hooked", True), ("cached", True)]
+    assert not cached.storageLevel.useMemory
     seen.clear()
     out.cleanup()
-    assert seen == [False, False, "legacy"]
+    assert seen == [("own", False), ("hooked", False), ("cached", False)]
 
 
-def test_cleanup_hook_internal_typeerror_not_double_called(spark):
-    """The blocking dispatch is a signature probe, not try/except
-    TypeError: an error raised INSIDE the hook must propagate without
-    triggering a second (zero-arg) invocation."""
+def test_train_bpe_releases_its_barriers(spark):
+    """The merge table is driver-side, so train_bpe's word-table
+    barriers are dead on return: superseded rounds are released as the
+    next barrier lands, the last one on return."""
+    from pandasql_spark.operators.bpe import train_bpe
+
+    base = _ids(spark)
+    merges = train_bpe(_docs(spark), n_merges=10)
+    assert len(merges) == 10
+    assert not (_ids(spark) - base)
+
+
+def test_train_quality_classifier_releases_features(spark):
+    """The trained weights are driver-side, so the checkpointed feature
+    frame is dead on return — on the raise path too."""
     import pytest as _pytest
 
-    from pandasql_spark.operators.cache import attach_cleanup
+    from pandasql_spark.operators.classifier import train_quality_classifier
 
-    calls = []
+    docs = _docs(spark).withColumn("label", F.col("doc_id") % 2)
+    base = _ids(spark)
+    w, _ = train_quality_classifier(docs, n_buckets=64, epochs=2)
+    assert w.shape == (64,)
+    assert not (_ids(spark) - base)
 
-    def bad(blocking=False):
-        calls.append(blocking)
-        raise TypeError("internal bug, not a signature mismatch")
-
-    out = attach_cleanup(spark.range(1), bad)
-    with _pytest.raises(TypeError, match="internal bug"):
-        out.cleanup(blocking=True)
-    assert calls == [True]
+    with _pytest.raises(ValueError, match="empty"):
+        train_quality_classifier(docs.limit(0), n_buckets=64, epochs=2)
+    assert not (_ids(spark) - base)
 
 
-def test_cleanup_positional_only_blocking_gets_zero_arg_call(spark):
-    """r17 review: a hook whose 'blocking' parameter cannot be passed
-    by keyword (positional-only / *args) must get the zero-arg call,
-    not a signature TypeError that skips its work."""
-    from pandasql_spark.operators.cache import attach_cleanup
+def test_local_checkpoint_only_in_cache_module():
+    """One lineage barrier: every localCheckpoint in the engine goes
+    through operators/cache.py:barrier."""
+    import pathlib
 
-    seen = []
+    import pandasql_spark
 
-    def pos_only(blocking=False, /):
-        seen.append("pos_only")
-
-    def star_args(*blocking):
-        seen.append(("star", blocking))
-
-    out = attach_cleanup(spark.range(1), pos_only, star_args)
-    out.cleanup(blocking=True)
-    assert seen == ["pos_only", ("star", ())]
+    root = pathlib.Path(pandasql_spark.__file__).parent
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if "localCheckpoint(" in p.read_text()
+    )
+    assert hits == ["operators/cache.py"]

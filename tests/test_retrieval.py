@@ -109,13 +109,16 @@ def test_topk_plan_is_take_ordered(corpus_df):
     assert "TakeOrderedAndProject" in phys
 
 
-def test_filter_precedes_aggregation(corpus_df):
+def test_filter_precedes_aggregation(corpus_df, monkeypatch):
     # the isin prune must sit below the (doc, term) aggregate: the
     # optimized plan filters the exploded stream, so non-query terms
     # never reach the shuffle.
-    # barrier=False keeps full lineage so the optimized plan is
+    # an identity barrier keeps full lineage so the optimized plan is
     # inspectable below the (doc, term) aggregate
-    sdf = bm25_scores(corpus_df, ["join"], barrier=False)
+    from pandasql_spark.operators import retrieval
+
+    monkeypatch.setattr(retrieval, "barrier", lambda df: df)
+    sdf = bm25_scores(corpus_df, ["join"])
     opt = sdf._jdf.queryExecution().optimizedPlan().toString()
     agg_pos = opt.find("Aggregate")
     filt_pos = opt.find("Filter")
