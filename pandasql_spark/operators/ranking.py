@@ -62,7 +62,7 @@ def _partitioned_with_offsets(
     cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
     if num_partitions is None:
         num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
         )
     part = df.repartitionByRange(num_partitions, *cols).withColumn(
         _PID, F.spark_partition_id()

@@ -11,8 +11,12 @@ Scale-minded defaults (tunable via ``get_spark(**conf)``):
 - AQE on: runtime re-planning, skew-join splitting, partition coalescing.
   On a 1000-executor cluster this is what turns a bad static plan into a
   good one mid-flight.
-- ``spark.sql.shuffle.partitions``: default 32 for local testing; on a
-  real cluster this should be ~2-3x total cores (AQE coalesces down).
+- ``spark.sql.shuffle.partitions``: one partition per core of the local
+  session (``SPARK_GRAFT_CPUS``, else the process's CPU affinity). AQE
+  coalesces ordinary shuffle reads down from this width, but persisted
+  plans keep their exchange's partitioning and Structured Streaming
+  keeps one state store per partition per micro-batch, so those read
+  the width directly. On a real cluster pass ~2-3x total cores.
 - Arrow enabled for every pandas interchange point (``toPandas``,
   ``applyInPandas``, pandas UDFs) — batch columnar transfer instead of
   row pickling.
@@ -32,9 +36,6 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
-    ),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     # Parquet scans: pushdown + pruning are free perf at 100 TB. These are
@@ -85,6 +86,10 @@ def ensure_semantics(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "pandasql_spark", **conf: str) -> SparkSession:
     """Return the active SparkSession, creating one with tuned defaults.
 
+    A new session runs ``local[n]`` with ``n`` shuffle partitions, where
+    ``n`` is ``$SPARK_GRAFT_CPUS`` if set, else the cores this process
+    may run on.
+
     ``**conf`` overrides the defaults (keys use the usual dotted names with
     ``_`` accepted in place of ``.`` is NOT supported — pass real keys via
     ``get_spark(**{"spark.sql.shuffle.partitions": "64"})``).
@@ -96,10 +101,9 @@ def get_spark(app_name: str = "pandasql_spark", **conf: str) -> SparkSession:
     active = SparkSession.getActiveSession()
     if active is not None:
         return ensure_semantics(active)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    merged = dict(_DEFAULTS)
-    merged.update(conf)
+    merged = {**_DEFAULTS, "spark.sql.shuffle.partitions": str(cpus), **conf}
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

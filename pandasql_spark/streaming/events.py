@@ -39,8 +39,9 @@ def bounded_replay_shuffle(spark: SparkSession, n: int = 8):
     q76 windowed-KMV 3.2 s → 2.4 s, q97 admission 1.3 s → 1.1 s).
     Production entry points never pass through here — an unbounded
     stream keeps the session's width, where real state wants the
-    shards. No-op when the session is already at or under ``n``
-    (e.g. the test session's pinned 4).
+    shards. No-op when the session is already at or under ``n``, as
+    every local session on up to ``n`` cores is (``get_spark`` sets one
+    shuffle partition per core).
 
     NOT REENTRANT / NOT THREAD-SAFE: the cap mutates the session-global
     conf for the replay's duration, so any query PLANNED concurrently

@@ -14,12 +14,6 @@ import pandas as pd
 import pytest
 
 os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
-# 4 shuffle partitions to match the 4-core test session: stateful
-# streaming cost scales with state-store instances PER MICRO-BATCH
-# (32 partitions made the interval-join property replay 1.8x slower);
-# semantics are partition-count-independent — tests that need a
-# specific layout repartition explicitly.
-os.environ.setdefault("SPARK_GRAFT_SHUFFLE_PARTITIONS", "4")
 
 from pandasql_spark.session import get_spark  # noqa: E402
 
@@ -28,7 +22,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pandasql-spark-tests")
+    # a fixed width, so the suite runs the same plans and state-store
+    # counts on any host
+    s = get_spark("pandasql-spark-tests", **{"spark.sql.shuffle.partitions": "4"})
     yield s
 
 
