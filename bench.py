@@ -684,28 +684,17 @@ def bench_ingest(spark) -> dict:
         ingest_s = time.perf_counter() - t0
 
         native = ps.read_parquet(os.path.join(tmp, "native"), spark=spark)
-        # transfer_to_pandas_s is the RAW engine→pandas Arrow transfer —
-        # the number comparable to the reference's transfer sweep. The
-        # public compute() path additionally runs the fetch guard's
-        # engine-side probes (row-count short-circuit + exact byte agg
-        # for varwidth schemas); r6's apparent transfer regression
-        # (0.645→1.555 s) was that guard billing into this metric, so
-        # the two are now timed separately (guard delta ≈ 0.4 s at
-        # sf0.1, measured min-of-3 — see SCALING.md).
-        t0 = time.perf_counter()
-        pdf = native.to_spark().toPandas()
-        transfer_s = time.perf_counter() - t0
-
+        # transfer_to_pandas_s is the engine→pandas Arrow transfer —
+        # the number comparable to the reference's transfer sweep.
         t0 = time.perf_counter()
         pdf = native.compute()
-        guarded_s = time.perf_counter() - t0
+        transfer_s = time.perf_counter() - t0
 
         return {
             "rows": int(len(pdf)),
             "csv_mb": round(csv_mb, 1),
             "read_csv_offload_s": round(ingest_s, 3),
             "transfer_to_pandas_s": round(transfer_s, 3),
-            "guarded_transfer_s": round(guarded_s, 3),
             "read_ms_per_mb": round(ingest_s * 1000 / csv_mb, 2),
             "transfer_ms_per_mb": round(transfer_s * 1000 / csv_mb, 2),
         }

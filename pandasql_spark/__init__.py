@@ -21,7 +21,6 @@ from .core import (
     merge,
     offloading_strategy,
     register,
-    set_max_fetch_bytes,
     sql,
 )
 from .session import get_spark, stop
@@ -46,7 +45,6 @@ __all__ = [
     "merge",
     "offloading_strategy",
     "register",
-    "set_max_fetch_bytes",
     "sql",
     "get_spark",
     "stop",

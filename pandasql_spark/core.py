@@ -39,6 +39,11 @@ Scale notes (local[32] today, 1000 executors tomorrow):
 - ``__repr__`` fetches a bounded preview (REPR_ROWS) — an accidental
   ``print(df)`` on a 100 TB frame must not OOM the driver. Full fetch is
   only ever explicit ``compute()`` / ``to_pandas()``.
+- Every pandas fetch goes through ``fetch_pandas``: one ``toPandas`` job,
+  bounded by Spark's own ``spark.driver.maxResultSize`` (free driver
+  memory by default). A result past it raises MemoryError, as the
+  reference's ``_out_of_memory`` does (core.py:181-187), and the query
+  never runs a second time just to size the result.
 - Joins/aggs are expressed declaratively so AQE can pick broadcast vs
   shuffle-hash vs sort-merge and split skewed partitions at runtime.
 """
@@ -48,6 +53,7 @@ from __future__ import annotations
 from typing import Any, Iterable, Sequence
 
 import pandas as pd
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column as SparkColumn
 from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import SparkSession
@@ -59,109 +65,25 @@ from .session import get_spark
 #: rows fetched by __repr__/_repr_html_ previews (never full-frame).
 REPR_ROWS = 20
 
-#: fetch-back guard for compute()/to_pandas(): None → auto (free driver
-#: memory, reference core.py:181-187 `_free_memory()`); an int caps the
-#: estimated fetch at that many bytes; float('inf') disables the guard.
-_MAX_FETCH_BYTES: int | float | None = None
 
-
-def set_max_fetch_bytes(n: int | float | None) -> None:
-    """Configure the compute() fetch-back guard (None = auto: free
-    driver memory; float('inf') = disabled)."""
-    global _MAX_FETCH_BYTES
-    _MAX_FETCH_BYTES = n
-
-
-def _free_driver_memory() -> int | None:
-    """MemAvailable from /proc/meminfo (the reference's `_free_memory()`
-    analog, pandasql/core.py:34-38 via psutil). None when unknowable."""
+def fetch_pandas(sdf: SparkDataFrame) -> pd.DataFrame:
+    """The one pandas fetch: ``sdf.toPandas()``, run once. Spark counts
+    result bytes as they reach the driver and aborts the job past
+    ``spark.driver.maxResultSize`` (``get_spark`` sets it to the driver's
+    free memory); that refusal is re-raised as MemoryError, the
+    reference's ``_out_of_memory`` behavior (core.py:181-187). Every other
+    error propagates unchanged."""
     try:
-        with open("/proc/meminfo") as f:
-            for line in f:
-                if line.startswith("MemAvailable:"):
-                    return int(line.split()[1]) * 1024
-    except OSError:
-        pass
-    return None
-
-def _approx_row_bytes(schema) -> int:
-    """Pessimistic-enough per-row byte estimate from the schema alone
-    (used to convert the fetch-byte cap into a row cap for the guard's
-    count probe; variable-width types get generous flat estimates)."""
-
-    def sz(dt) -> int:
-        if isinstance(dt, (T.BooleanType, T.ByteType)):
-            return 1
-        if isinstance(dt, T.ShortType):
-            return 2
-        if isinstance(dt, (T.IntegerType, T.FloatType)):
-            return 4
-        if isinstance(dt, T.DecimalType):
-            return 16
-        if isinstance(dt, T.StringType):
-            return 24
-        if isinstance(dt, T.BinaryType):
-            return 64
-        if isinstance(dt, T.ArrayType):
-            return 16 * sz(dt.elementType)
-        if isinstance(dt, T.MapType):
-            return 16 * (sz(dt.keyType) + sz(dt.valueType))
-        if isinstance(dt, T.StructType):
-            return sum(sz(f.dataType) for f in dt.fields)
-        return 8  # long/double/timestamp/date and anything else fixed-width
-
-    return max(sum(sz(f.dataType) for f in schema.fields), 1)
-
-
-def _row_bytes_expr(sdf) -> SparkColumn:
-    """Per-row RESULT payload bytes as a Catalyst expression — the
-    fetch guard's measurement runs ENGINE-side (one distributed agg, no
-    Arrow transfer), so deciding whether a fetch is safe never itself
-    pulls data to the driver (the old 256-row ``toPandas`` probe could
-    pull GBs when single rows were multi-MB media payloads, and its
-    sample MEAN under-counted heavy-tailed widths — one 10 MB doc among
-    1 KB docs slipped through). Strings/binaries count their exact
-    octet length; nested types are measured via their JSON rendering
-    (conservative for numerics, exact-ish for text); fixed-width
-    primitives use the schema width."""
-    fixed = 0
-    var_terms = []
-    for f in sdf.schema.fields:
-        dt = f.dataType
-        col = sdf[f.name]
-        if isinstance(dt, (T.StringType, T.BinaryType)):
-            var_terms.append(F.coalesce(F.octet_length(col), F.lit(0)))
-            fixed += 16  # per-object header overhead
-        elif isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
-            var_terms.append(
-                F.coalesce(F.octet_length(F.to_json(col)), F.lit(0))
-            )
-            fixed += 16
-        else:
-            fixed += _approx_row_bytes(T.StructType([f]))
-    expr = F.lit(fixed).cast("long")
-    for t in var_terms:
-        expr = expr + t.cast("long")
-    return expr
-
-
-def _has_varwidth(schema) -> bool:
-    """True if any column's width is data-dependent (string / binary /
-    array / map, possibly nested) — i.e. the schema-only estimate can be
-    arbitrarily wrong and the fetch guard should measure a sample."""
-
-    def chk(dt) -> bool:
-        if isinstance(dt, (T.StringType, T.BinaryType)):
-            return True
-        if isinstance(dt, T.ArrayType):
-            return True
-        if isinstance(dt, T.MapType):
-            return True
-        if isinstance(dt, T.StructType):
-            return any(chk(f.dataType) for f in dt.fields)
-        return False
-
-    return any(chk(f.dataType) for f in schema.fields)
+        return sdf.toPandas()
+    except Py4JJavaError as e:
+        if "maxResultSize" not in str(e):
+            raise
+        raise MemoryError(
+            "compute() result is larger than spark.driver.maxResultSize. "
+            "Try accessing a smaller subset of the data you need, e.g. "
+            "df.head(n) or df[:n].compute(), or write it out distributed "
+            "with to_parquet()."
+        ) from e
 
 
 _FLOAT_TYPES = (T.DoubleType, T.FloatType, T.DecimalType)
@@ -417,7 +339,7 @@ class Arithmetic(Expression):
         return self._sdf.select(self._col.alias("res"))
 
     def compute(self) -> pd.Series:
-        return self.to_spark().toPandas()["res"]
+        return fetch_pandas(self.to_spark())["res"]
 
 
 class Criterion(Expression):
@@ -577,81 +499,10 @@ class BaseFrame:
 
     def compute(self) -> Any:
         """Force materialization → pandas (reference ``compute()``,
-        core.py:91-112), behind a fetch-back guard: when the optimizer's
-        size estimate for the result exceeds the cap (default: free
-        driver memory — the reference's ``_out_of_memory`` behavior,
-        core.py:181-187), raise MemoryError instead of OOM-ing the
-        driver mid-``toPandas``. Override per call site with
-        ``set_max_fetch_bytes`` (``float('inf')`` disables)."""
-        return self._guarded_to_pandas()
-
-    def _guarded_to_pandas(self) -> pd.DataFrame:
-        cap = _MAX_FETCH_BYTES if _MAX_FETCH_BYTES is not None else _free_driver_memory()
-        if cap is not None and cap != float("inf"):
-            est = self.memory_usage()
-            # The plan-stat gate ALSO flat-rates variable-width data
-            # (~20 B/string in non-CBO sizeInBytes), so a genuinely
-            # over-cap document fetch can come in WAY under the cap on
-            # paper. For varwidth schemas, fall through to the probe
-            # whenever the stat is within 2^16 of the cap — document
-            # rows run 10^2–10^4 x the flat rate, and the probe itself
-            # is two bounded jobs, skipped entirely for comfortably
-            # small frames.
-            suspicious = (
-                est > cap
-                or (
-                    est > 0
-                    and (est << 16) > cap
-                    and _has_varwidth(self.to_spark().schema)
-                )
-            )
-            if suspicious:
-                # The non-CBO sizeInBytes statistic multiplies child
-                # sizes through joins — a tiny post-join aggregate can
-                # estimate petabytes. Two bounded engine-side probes
-                # confirm before raising, neither fetching data:
-                # 1. Row count: limit(cap_rows + 1).count() short-
-                #    circuits, catching absurd row counts in one cheap
-                #    pass even on petabyte results.
-                # 2. Exact bytes (varwidth schemas only): stage 1 just
-                #    bounded the result to <= cap_rows rows, so ONE
-                #    distributed agg of _row_bytes_expr measures the
-                #    EXACT payload size — immune to heavy-tailed widths
-                #    that a sample mean misses (one 10 MB doc among
-                #    1 KB docs), and it never Arrow-fetches the way the
-                #    old 256-row sample probe did.
-                sdf = self.to_spark()
-                row_bytes = _approx_row_bytes(sdf.schema)
-                cap_rows = min(int(cap // row_bytes), 2**31 - 2)
-                if sdf.limit(cap_rows + 1).count() > cap_rows:
-                    raise MemoryError(
-                        f"compute() would fetch more than {cap_rows:,} rows "
-                        f"(~{row_bytes} bytes/row, cap {cap:,.0f} bytes) to "
-                        "the driver. Try accessing a smaller "
-                        "subset of the data you need, e.g. df.head(n) or "
-                        "df[:n].compute(), or write it out distributed with "
-                        "to_parquet(); set_max_fetch_bytes(float('inf')) "
-                        "overrides the guard."
-                    )
-                if _has_varwidth(sdf.schema):
-                    measured = (
-                        sdf.select(_row_bytes_expr(sdf).alias("__b"))
-                        .agg(F.sum("__b"))
-                        .first()[0]
-                        or 0
-                    )
-                    if measured > cap:
-                        raise MemoryError(
-                            f"compute() would fetch ~{measured:,} bytes "
-                            f"(measured engine-side; cap {cap:,.0f}) to the "
-                            "driver. Try accessing a smaller subset of the "
-                            "data you need, e.g. df.head(n) or "
-                            "df[:n].compute(), or write it out distributed "
-                            "with to_parquet(); "
-                            "set_max_fetch_bytes(float('inf')) overrides "
-                            "the guard."
-                        )
-        return self.to_spark().toPandas()
+        core.py:91-112). A result larger than the session's
+        ``spark.driver.maxResultSize`` (default: free driver memory)
+        raises MemoryError instead of OOM-ing the driver (`fetch_pandas`)."""
+        return fetch_pandas(self.to_spark())
 
     def to_pandas(self) -> Any:
         return self.compute()
@@ -702,7 +553,7 @@ class BaseFrame:
         # Bounded preview: never full-fetch on repr (scale safety; the
         # reference fetches everything, core.py:627-633 — deliberate
         # deviation for 100 TB frames).
-        preview = self.to_spark().limit(REPR_ROWS + 1).toPandas()
+        preview = fetch_pandas(self.to_spark().limit(REPR_ROWS + 1))
         truncated = len(preview) > REPR_ROWS
         text = repr(preview.head(REPR_ROWS))
         if truncated:
@@ -710,7 +561,7 @@ class BaseFrame:
         return text
 
     def _repr_html_(self) -> str:
-        return self.to_spark().limit(REPR_ROWS).toPandas()._repr_html_()
+        return fetch_pandas(self.to_spark().limit(REPR_ROWS))._repr_html_()
 
     # -- sinks (core.py:627-640): force compute then delegate to pandas
     # writers for exact reference parity. Scale path: .to_parquet/.write
@@ -1161,7 +1012,7 @@ class Projection(BaseFrame, Expression):
         return self.to_spark().distinct().count()
 
     def compute(self):
-        pdf = self._guarded_to_pandas()
+        pdf = fetch_pandas(self.to_spark())
         if len(self._cols) == 1:
             return pdf[self._cols[0]]  # 1-col projection → Series
         return pdf

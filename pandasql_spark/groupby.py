@@ -29,7 +29,7 @@ from typing import Any, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame as SparkDataFrame
 
-from .core import AGG_FUNCS, BaseFrame, DataFrame, agg_columns
+from .core import AGG_FUNCS, BaseFrame, DataFrame, agg_columns, fetch_pandas
 
 
 class Aggregate(BaseFrame):
@@ -46,7 +46,7 @@ class Aggregate(BaseFrame):
         return self._sdf
 
     def compute(self) -> Any:
-        row = self._sdf.toPandas().iloc[0]
+        row = fetch_pandas(self._sdf).iloc[0]
         if len(self._cols) == 1:
             return row[self._cols[0]]
         return pd.Series({c: row[c] for c in self._cols}, name=self._func)
@@ -197,7 +197,7 @@ class GroupedAggregate(BaseFrame):
         return self._sdf
 
     def compute(self) -> pd.DataFrame:
-        pdf = self._sdf.toPandas()
+        pdf = fetch_pandas(self._sdf)
         if self._as_index:
             pdf = pdf.set_index(self._keys if len(self._keys) > 1 else self._keys[0])
             pdf = pdf.sort_index()
@@ -229,7 +229,7 @@ class GroupedMultiAggregate(GroupedAggregate):
         self._pairs = pairs
 
     def compute(self) -> pd.DataFrame:
-        pdf = self._sdf.toPandas()
+        pdf = fetch_pandas(self._sdf)
         if self._as_index:
             pdf = pdf.set_index(self._keys if len(self._keys) > 1 else self._keys[0])
             pdf = pdf.sort_index()
@@ -265,7 +265,7 @@ class MultiAggregate(BaseFrame):
         return self._sdf
 
     def compute(self) -> pd.DataFrame:
-        row = self._sdf.toPandas().iloc[0]
+        row = fetch_pandas(self._sdf).iloc[0]
         data: dict[str, dict[str, Any]] = {}
         for f, c in self._pairs:
             data.setdefault(c, {})[f] = row[f"{c}__{f}"]

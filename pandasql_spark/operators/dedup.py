@@ -981,7 +981,6 @@ def image_dhash(
         raise ValueError(
             f"method must be one of {sorted(_IMAGE_HASHES)}, got {method!r}"
         )
-    hash_fn = _IMAGE_HASHES[method]
 
     def _batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..functions.imagecodec import ImageDecodeError, decode_image
@@ -997,12 +996,8 @@ def image_dhash(
                     continue
                 oks.append(True)
                 pxs.append(px)
-            if method == "dhash":
-                fps = iter(_dhash64_batch(pxs))  # bit-identical, batched
-            elif method == "phash":
-                fps = iter(_phash64_batch(pxs))  # bit-identical, batched
-            else:
-                fps = iter([hash_fn(px) for px in pxs])
+            batch = _dhash64_batch if method == "dhash" else _phash64_batch
+            fps = iter(batch(pxs))  # bit-identical to the per-image hash
             hs = [next(fps) if ok else None for ok in oks]
             yield pd.DataFrame(
                 {

@@ -44,18 +44,6 @@ from ..functions.imagecodec import (
     decode_image_meta,
 )
 
-#: typed metadata struct carried next to every media binary column.
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType()),  # image|audio|video
-        T.StructField("format", T.StringType()),      # png|jpeg|wav|mp4…
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("size_bytes", T.LongType()),
-    ]
-)
-
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),

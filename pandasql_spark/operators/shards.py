@@ -42,9 +42,6 @@ from pyspark.sql import functions as F
 
 from .delta import content_fingerprint
 
-# 16^13 = 2^52: hex13 values are exact in both int64 and float64.
-_HEX13_SPAN = 4503599627370496
-
 
 def _hex13_long(col: Column) -> Column:
     """First 13 hex chars of an md5 → exact 52-bit integer (long).

@@ -70,6 +70,19 @@ _RUNTIME_SEMANTICS: dict[str, str] = {
 }
 
 
+def _free_driver_memory() -> int | None:
+    """MemAvailable from /proc/meminfo (the reference's `_free_memory()`
+    analog, pandasql/core.py:34-38 via psutil). None when unknowable."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    return int(line.split()[1]) * 1024
+    except OSError:
+        pass
+    return None
+
+
 def ensure_semantics(spark: SparkSession) -> SparkSession:
     """Pin the runtime-settable semantics confs on ``spark`` (idempotent).
 
@@ -88,7 +101,8 @@ def get_spark(app_name: str = "pandasql_spark", **conf: str) -> SparkSession:
 
     A new session runs ``local[n]`` with ``n`` shuffle partitions, where
     ``n`` is ``$SPARK_GRAFT_CPUS`` if set, else the cores this process
-    may run on.
+    may run on, and caps results fetched to the driver
+    (``spark.driver.maxResultSize``) at the driver's free memory.
 
     ``**conf`` overrides the defaults (keys use the usual dotted names with
     ``_`` accepted in place of ``.`` is NOT supported — pass real keys via
@@ -103,7 +117,11 @@ def get_spark(app_name: str = "pandasql_spark", **conf: str) -> SparkSession:
         return ensure_semantics(active)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     builder = SparkSession.builder.appName(app_name).master(f"local[{cpus}]")
-    merged = {**_DEFAULTS, "spark.sql.shuffle.partitions": str(cpus), **conf}
+    derived = {"spark.sql.shuffle.partitions": str(cpus)}
+    free = _free_driver_memory()
+    if free is not None:
+        derived["spark.driver.maxResultSize"] = str(free)
+    merged = {**_DEFAULTS, **derived, **conf}
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

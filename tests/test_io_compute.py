@@ -3,6 +3,11 @@ API): every reader round-trips, every sink writes what compute() shows."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -132,115 +137,123 @@ def test_write_compacted(spark, tmp_path):
     assert ps.read_parquet(p1).to_spark().count() == 10_000
 
 
-def test_compute_fetch_guard(spark):
-    """Oversized compute() raises MemoryError (reference _out_of_memory,
-    core.py:181-187) instead of OOM-ing the driver; bounded fetches
-    (head/limit) stay under the same cap and succeed."""
-    import pandas as pd
-    import pytest
+# Spark refuses to change spark.driver.maxResultSize on a running session
+# (CANNOT_MODIFY_CONFIG) and the suite's session is already active, so the
+# fetch bound is probed in a session of its own, started in a subprocess.
+_FETCH_PROBE = """
+import json
+import sys
 
-    import pandasql_spark as ps
-    from pandasql_spark.core import set_max_fetch_bytes
+import pandas as pd
+from pyspark.sql import functions as F
 
-    df = ps.DataFrame(
-        pd.DataFrame({"x": range(50_000), "s": ["payload" * 8] * 50_000})
-    )
+import pandasql_spark as ps
+from pandasql_spark.session import get_spark
+
+spark = get_spark("fetch-bound-probe", **{"spark.driver.maxResultSize": "1m"})
+spark.sparkContext.setLogLevel("ERROR")
+
+
+def refused(thunk):
     try:
-        set_max_fetch_bytes(10_000)  # ~10 kB cap; frame is megabytes
-        with pytest.raises(MemoryError, match="smaller subset"):
-            df.compute()
-        with pytest.raises(MemoryError):
-            df[["s"]].compute()  # Projection path shares the guard
-        with pytest.raises(MemoryError):
-            df.to_csv("/tmp/_guard_should_not_write.csv")
-        # bounded fetches pass under the same cap
-        assert len(df.head(5).compute()) == 5
-        assert len(df[:7].compute()) == 7
-        # disabling the guard restores the full fetch
-        set_max_fetch_bytes(float("inf"))
-        assert len(df.compute()) == 50_000
-    finally:
-        set_max_fetch_bytes(None)
-
-    # auto mode (free driver memory) lets ordinary small frames through
-    assert len(df.head(3).compute()) == 3
+        thunk()
+    except MemoryError as e:
+        return "smaller subset" in str(e)
+    return False
 
 
-def test_compute_guard_join_overestimate_probe(spark):
+def other_error(thunk):
+    try:
+        thunk()
+    except Exception as e:
+        return [type(e).__name__, "boom" in str(e)]
+    return None
+
+
+wide = ps.DataFrame(pd.DataFrame({"x": range(50_000), "s": ["payload" * 8] * 50_000}))
+docs = ps.DataFrame(pd.DataFrame({"doc_id": range(2_000), "text": ["x" * 5_000] * 2_000}))
+texts = ["x" * 1_000] * 500
+whale = ps.DataFrame(pd.DataFrame({"doc_id": range(501), "text": texts + ["y" * 8_000_000]}))
+slim = ps.DataFrame(pd.DataFrame({"doc_id": range(500), "text": texts}))
+a = ps.DataFrame(pd.DataFrame({"k": range(1000), "x": range(1000)}))
+b = ps.DataFrame(pd.DataFrame({"k": range(1000), "y": range(1000)}))
+join = a.merge(b, on="k")
+boom = ps.DataFrame(sdf=spark.range(3).select(F.raise_error(F.lit("boom")).alias("e")))
+out = {
+    "refused": {
+        "frame": refused(wide.compute),
+        "projection": refused(wide[["s"]].compute),
+        "arithmetic": refused(wide.s.str.upper().compute),
+        "to_csv": refused(lambda: wide.to_csv(sys.argv[1])),
+        "grouped": refused(wide.groupby("x").max().compute),
+        "grouped_multi": refused(wide.groupby("x").agg(["max", "min"]).compute),
+        "aggregate": refused(whale.max().compute),
+        "multi_aggregate": refused(whale.agg(["max", "min"]).compute),
+    },
+    "wide_strings_refused": refused(docs.compute),
+    "whale_refused": refused(whale.compute),
+    "rows": {
+        "head": len(wide.head(5).compute()),
+        "slice": len(wide[:7].compute()),
+        "join": len(join.compute()),
+        "slim": len(slim.compute()),
+        "whale_head": len(whale.head(10).compute()),
+    },
+    "join_estimate": join.memory_usage(),
+    "other_error": other_error(boom.compute),
+}
+spark.stop()
+print("PROBE " + json.dumps(out))
+"""
+
+
+@pytest.fixture(scope="module")
+def fetch_probe(tmp_path_factory):
+    """One session with a 1 MB result bound, shared by the fetch tests."""
+    csv = str(tmp_path_factory.mktemp("fetch") / "refused.csv")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", _FETCH_PROBE, csv],
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2"}, cwd=root,
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    line = next(ln for ln in out.splitlines() if ln.startswith("PROBE "))
+    return {**json.loads(line[len("PROBE "):]), "csv": csv}
+
+
+def test_compute_fetch_guard(fetch_probe):
+    """Oversized fetches raise MemoryError (reference _out_of_memory,
+    core.py:181-187) at every pandas fetch site — frame, projection,
+    arithmetic, grouped and ungrouped aggregates, and the pandas sinks —
+    instead of OOM-ing the driver; bounded fetches (head/limit) pass
+    under the same bound; other job failures propagate unchanged."""
+    for site, ok in fetch_probe["refused"].items():
+        assert ok, f"{site} fetch was not refused"
+    assert not os.path.exists(fetch_probe["csv"])
+    assert fetch_probe["rows"]["head"] == 5
+    assert fetch_probe["rows"]["slice"] == 7
+    name, has_message = fetch_probe["other_error"]
+    assert name != "MemoryError" and has_message
+
+
+def test_compute_guard_join_overestimate_probe(fetch_probe):
     """The non-CBO sizeInBytes stat multiplies through joins (a 1000x1000
-    merge 'estimates' hundreds of MB for a 24 kB result); the guard must
-    confirm with its bounded count probe instead of raising on the
-    estimate alone."""
-    import pandas as pd
-
-    import pandasql_spark as ps
-    from pandasql_spark.core import set_max_fetch_bytes
-
-    a = ps.DataFrame(pd.DataFrame({"k": range(1000), "x": range(1000)}))
-    b = ps.DataFrame(pd.DataFrame({"k": range(1000), "y": range(1000)}))
-    j = a.merge(b, on="k")
-    try:
-        set_max_fetch_bytes(1_000_000)  # far below the bogus estimate
-        assert j.memory_usage() > 1_000_000  # the over-estimate is real
-        assert len(j.compute()) == 1000      # ...but compute() still works
-        # and a genuinely over-cap join result still raises
-        set_max_fetch_bytes(100)
-        import pytest
-
-        with pytest.raises(MemoryError, match="rows"):
-            j.compute()
-    finally:
-        set_max_fetch_bytes(None)
+    merge 'estimates' MBs for a 24 kB result); the bound counts the real
+    result bytes, so the join computes under a 1 MB bound."""
+    assert fetch_probe["join_estimate"] > 1_000_000  # the over-estimate is real
+    assert fetch_probe["rows"]["join"] == 1000
 
 
-def test_compute_guard_measures_wide_strings(spark):
-    """ADVICE r5: the schema-only flat rate (24 B/string) inflated the
-    row cap ~200x for document-shaped rows, letting a genuinely
-    over-cap fetch through the probe. The guard now floors bytes/row
-    with a measured sample: 2,000 rows x ~5 kB strings (~10 MB real)
-    under a 1 MB cap must raise even though the flat estimate
-    (32 B/row -> 31k-row cap) would have passed the count probe."""
-    import pandas as pd
-    import pytest
-
-    import pandasql_spark as ps
-    from pandasql_spark.core import set_max_fetch_bytes
-
-    df = ps.DataFrame(
-        pd.DataFrame({"doc_id": range(2_000), "text": ["x" * 5_000] * 2_000})
-    )
-    try:
-        set_max_fetch_bytes(1_000_000)
-        with pytest.raises(MemoryError, match="smaller subset"):
-            df.compute()
-        # bounded fetches still fine under the same cap
-        assert len(df.head(10).compute()) == 10
-    finally:
-        set_max_fetch_bytes(None)
+def test_compute_guard_measures_wide_strings(fetch_probe):
+    """2,000 rows x 5 kB strings (~10 MB) refuse under a 1 MB bound,
+    however few bytes the schema's flat string width would suggest."""
+    assert fetch_probe["wide_strings_refused"]
 
 
-def test_compute_guard_heavy_tailed_widths(spark):
-    """VERDICT r6 task 5: the old sample-MEAN probe missed heavy tails —
-    one 8 MB doc hiding among 5,000 1 KB docs pushed the true fetch to
-    ~13 MB while the sampled mean said ~1 KB/row. The guard now measures
-    EXACT payload bytes engine-side (one distributed agg, no Arrow
-    fetch), so the skewed corpus must refuse under a 6 MB cap and the
-    same corpus without the whale must pass."""
-    import pandas as pd
-    import pytest
-
-    import pandasql_spark as ps
-    from pandasql_spark.core import set_max_fetch_bytes
-
-    texts = ["x" * 1_000] * 5_000
-    whale = texts + ["y" * 8_000_000]
-    df = ps.DataFrame(pd.DataFrame({"doc_id": range(5_001), "text": whale}))
-    slim = ps.DataFrame(pd.DataFrame({"doc_id": range(5_000), "text": texts}))
-    try:
-        set_max_fetch_bytes(6_000_000)
-        with pytest.raises(MemoryError, match="smaller subset"):
-            df.compute()
-        assert len(slim.compute()) == 5_000  # ~5 MB true payload passes
-        assert len(df.head(10).compute()) == 10  # bounded fetch still fine
-    finally:
-        set_max_fetch_bytes(None)
+def test_compute_guard_heavy_tailed_widths(fetch_probe):
+    """One 8 MB document among 500 1 kB ones refuses under a 1 MB
+    bound; the same documents without it (~0.5 MB) fetch, and so does a
+    head(10) of the skewed corpus."""
+    assert fetch_probe["whale_refused"]
+    assert fetch_probe["rows"]["slim"] == 500
+    assert fetch_probe["rows"]["whale_head"] == 10

@@ -1,5 +1,6 @@
 """Session sizing: ``get_spark`` derives ``local[n]`` and the default
-shuffle width from one core count.
+shuffle width from one core count, and the result-size bound from the
+driver's free memory.
 
 Runs in a subprocess because the suite's own session is already active
 (and ``get_spark`` returns an active session as-is)."""
@@ -15,18 +16,24 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PROBE = """
 import json
-from pandasql_spark.session import get_spark
+from pandasql_spark.session import _free_driver_memory, get_spark
 
+free = _free_driver_memory()
 spark = get_spark("session-sizing-probe")
 spark.sparkContext.setLogLevel("ERROR")
 derived = (spark.conf.get("spark.sql.shuffle.partitions"),
            spark.sparkContext.defaultParallelism)
-same = get_spark(**{"spark.sql.shuffle.partitions": "5"}) is spark
+limit = spark.conf.get("spark.driver.maxResultSize")
+explicit = {"spark.sql.shuffle.partitions": "5", "spark.driver.maxResultSize": "2g"}
+same = get_spark(**explicit) is spark
+kept = spark.conf.get("spark.driver.maxResultSize") == limit
 spark.stop()
-spark = get_spark("session-sizing-probe", **{"spark.sql.shuffle.partitions": "5"})
-override = spark.conf.get("spark.sql.shuffle.partitions")
+spark = get_spark("session-sizing-probe", **explicit)
+override = (spark.conf.get("spark.sql.shuffle.partitions"),
+            spark.conf.get("spark.driver.maxResultSize"))
 spark.stop()
-print("PROBE " + json.dumps({"derived": derived, "same": same, "override": override}))
+print("PROBE " + json.dumps({"derived": derived, "free": free, "limit": limit,
+                             "same": same, "kept": kept, "override": override}))
 """
 
 
@@ -40,6 +47,10 @@ def test_shuffle_partitions_follow_cores():
     got = json.loads(line[len("PROBE "):])
     # one core count sizes both the executor slots and the shuffle width
     assert got["derived"] == ["3", 3]
-    # an active session is returned as-is; explicit conf still wins
+    # the result bound is the driver's free memory, read at session build
+    assert abs(int(got["limit"]) - got["free"]) < 0.1 * got["free"]
+    # an active session is returned as-is, its bound included; explicit
+    # conf still wins
     assert got["same"] is True
-    assert got["override"] == "5"
+    assert got["kept"] is True
+    assert got["override"] == ["5", "2g"]
