@@ -6,6 +6,12 @@ in the hot path, so they stay inside whole-stage codegen and scale
 linearly with executors. Designed for the `documents` table
 (doc_id, text, lang, source, n_chars) but schema-agnostic.
 
+Tokenize once: `tokens` is the engine's one whitespace tokenizer, and
+the token stats take its token ARRAY, not the text. Catalyst evaluates
+a shared subexpression once only when it is bound to a column, so a
+caller computing several stats projects ``tokens(text)`` once and
+passes that column to each (q16: one split per row).
+
 Determinism note: every function here is reproducible cross-engine (the
 DuckDB oracles in __spark_entry__ mirror them expression-for-expression),
 which is what makes them hash-checkable in the correctness gate.
@@ -35,64 +41,61 @@ DEFAULT_LANG_PROFILES: Mapping[str, Sequence[str]] = {
 
 
 def tokens(col: Column | str) -> Column:
-    """Whitespace tokenization. Single-space split keeps exact parity with
-    the SQL oracle; use ``tokens_regex`` for messy real-world whitespace."""
-    return F.split(F.col(col) if isinstance(col, str) else col, " ")
+    """Whitespace tokenization: split the text on a single space (so
+    runs of spaces yield empty tokens), the convention the DuckDB
+    oracles' ``string_split(text, ' ')`` mirrors."""
+    return F.split(col, " ")
 
 
-def tokens_regex(col: Column | str) -> Column:
-    """BPE-ish regex tokenization: words, numbers, or single punctuation
-    marks — the usual pre-tokenizer shape for token counting."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(c, F.lit(r"(\w+|[^\w\s])"), 1)
-
-
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
+def token_count(toks: Column | str) -> Column:
+    """Number of tokens in a `tokens` array (project the array once
+    when several stats read it)."""
+    return F.size(toks)
 
 
 def char_count(col: Column | str) -> Column:
-    return F.length(F.col(col) if isinstance(col, str) else col)
+    return F.length(col)
 
 
-def uniq_token_count(col: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(col)))
+def uniq_token_count(toks: Column | str) -> Column:
+    return F.size(F.array_distinct(toks))
 
 
-def stopword_count(col: Column | str, stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(col), lambda t: t.isin(list(stopwords))))
+def stopword_count(toks: Column | str, stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> Column:
+    return F.size(F.filter(toks, lambda t: t.isin(list(stopwords))))
 
 
-def stopword_ratio(col: Column | str, stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> Column:
-    return F.round(stopword_count(col, stopwords) / token_count(col), 6)
+def stopword_ratio(toks: Column | str, stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> Column:
+    return F.round(stopword_count(toks, stopwords) / token_count(toks), 6)
 
 
-def type_token_ratio(col: Column | str) -> Column:
-    """Lexical diversity: distinct tokens / total tokens, rounded for
-    cross-engine hash stability."""
-    return F.round(uniq_token_count(col) / token_count(col), 6)
+def type_token_ratio(toks: Column | str) -> Column:
+    """Lexical diversity: distinct tokens / total tokens of a `tokens`
+    array, rounded for cross-engine hash stability."""
+    return F.round(uniq_token_count(toks) / token_count(toks), 6)
 
 
-def quality_score(col: Column | str, stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> Column:
-    """Heuristic document quality in [0,1]: length credit (saturating at
-    200 tokens) + lexical diversity + stopword presence. Deterministic,
-    JVM-side, mirrors common quality filters (length/stopword ratios)."""
-    tc = token_count(col)
+def quality_score(toks: Column | str, stopwords: Sequence[str] = DEFAULT_STOPWORDS) -> Column:
+    """Heuristic document quality in [0,1] from a `tokens` array: length
+    credit (saturating at 200 tokens) + lexical diversity + stopword
+    presence. Deterministic, JVM-side, mirrors common quality filters
+    (length/stopword ratios)."""
+    tc = token_count(toks)
     length_credit = F.least(tc, F.lit(200)) / F.lit(200.0)
-    diversity = uniq_token_count(col) / tc
-    stop_presence = F.least(stopword_count(col, stopwords), F.lit(10)) / F.lit(10.0)
+    diversity = uniq_token_count(toks) / tc
+    stop_presence = F.least(stopword_count(toks, stopwords), F.lit(10)) / F.lit(10.0)
     return F.round(0.4 * length_credit + 0.4 * diversity + 0.2 * stop_presence, 6)
 
 
 def lang_id(
-    col: Column | str,
+    toks: Column | str,
     profiles: Mapping[str, Sequence[str]] = DEFAULT_LANG_PROFILES,
     default: str = "unk",
 ) -> Column:
-    """Marker-word language ID: count hits per language profile, pick the
-    argmax (ties broken by profile order), ``default`` when no profile
-    scores. One pass over the token array per language — all JVM-side."""
-    toks = tokens(col)
+    """Marker-word language ID over a `tokens` array: count hits per
+    language profile, pick the argmax (ties broken by profile order),
+    ``default`` when no profile scores. One pass over the token array
+    per language — all JVM-side."""
 
     def _hits(words: Sequence[str]):
         wl = list(words)
@@ -115,8 +118,7 @@ def lang_id(
 def normalize_text(col: Column | str) -> Column:
     """Canonical form for fingerprinting: lowercase, collapse whitespace,
     trim."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
 #: characters stripped by `strip_invisible`: C0/C1 controls (keeping
@@ -135,8 +137,7 @@ def strip_invisible(col: Column | str) -> Column:
     (a ZWSP inside a duplicated paragraph defeats `exact_dedup` and
     `substring_dedup`, whose hashes are byte-sensitive). Pure codegen
     `regexp_replace`; keeps tab/newline/CR."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, _INVISIBLE_CLASS, "")
+    return F.regexp_replace(col, _INVISIBLE_CLASS, "")
 
 
 def normalize_unicode(col: Column | str, strip: bool = True) -> Column:
@@ -158,9 +159,7 @@ def normalize_unicode(col: Column | str, strip: bool = True) -> Column:
     NFC is stability-guaranteed for assigned codepoints, which is what
     keeps Python's unicodedata and DuckDB's utf8proc `nfc_normalize`
     (the q94 oracle) in exact agreement."""
-    c = strip_invisible(col) if strip else (
-        F.col(col) if isinstance(col, str) else col
-    )
+    c = strip_invisible(col) if strip else col
 
     @F.pandas_udf("string")
     def _nfc(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:

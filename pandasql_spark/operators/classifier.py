@@ -38,6 +38,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from .cache import barrier
 
 #: Knuth's multiplicative-hash constant; the seeded pseudo-weights are
@@ -69,23 +70,22 @@ def seeded_weight(bucket: Column, seed: int = 0) -> Column:
 
 
 def score_column(
-    text_col: Column | str,
+    toks: Column | str,
     n_buckets: int = 1 << 18,
     seed: int = 0,
     bias: float = 0.0,
     weight_fn=None,
 ) -> Column:
-    """The expression-path score: bias + Σ weight(bucket(token)) as a
-    single left-to-right ``F.aggregate`` fold over the whitespace
-    tokens (fold order pinned so a list_reduce oracle matches
-    bit-for-bit). ``weight_fn`` defaults to the seeded weights; pass
-    any Column→Column function of the bucket to swap the model."""
+    """The expression-path score over a `text.tokens` array (project
+    it once when token stats read it too): bias + Σ weight(bucket(t))
+    as one left-to-right ``F.aggregate`` fold (order pinned so a
+    list_reduce oracle matches bit-for-bit). ``weight_fn`` defaults
+    to the seeded weights; any Column→Column function swaps the model."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
     wf = weight_fn or (lambda b: seeded_weight(b, seed))
-    col = F.col(text_col) if isinstance(text_col, str) else text_col
     return F.aggregate(
-        F.split(col, " "),
+        toks,
         F.lit(float(bias)),
         lambda acc, t: acc + wf(token_bucket(t, n_buckets)),
     )
@@ -119,14 +119,17 @@ def linear_quality_score(
     bag (per-token average instead of sum) — pair it with a model
     trained under the trainer's ``normalize=True`` default."""
     if weights is None:
-        s = score_column(text_col, n_buckets, seed, bias)
+        s = score_column("__toks", n_buckets, seed, bias)
         if normalize:
-            s = (s - F.lit(float(bias))) / F.size(
-                F.split(F.col(text_col), " ")
-            ) + F.lit(float(bias))
-        return df.withColumn(score_col, s).withColumn(prob_col, sigmoid(F.col(score_col)))
+            s = (s - F.lit(float(bias))) / F.size("__toks") + F.lit(float(bias))
+        return (
+            df.withColumn("__toks", tokens(text_col))
+            .withColumn(score_col, s)
+            .withColumn(prob_col, sigmoid(F.col(score_col)))
+            .drop("__toks")
+        )
     tok = df.select(
-        id_col, F.explode(F.split(F.col(text_col), " ")).alias("__tok")
+        id_col, F.explode(tokens(text_col)).alias("__tok")
     ).select(id_col, token_bucket(F.col("__tok"), n_buckets).alias("bucket"))
     joined = tok.join(
         F.broadcast(weights.select("bucket", "weight")), "bucket", "left"
@@ -164,8 +167,7 @@ def doc_features(
     return df.select(
         F.col(label_col).cast("double").alias("label"),
         F.transform(
-            F.split(F.col(text_col), " "),
-            lambda t: token_bucket(t, n_buckets),
+            tokens(text_col), lambda t: token_bucket(t, n_buckets)
         ).alias("buckets"),
     )
 

@@ -50,18 +50,10 @@ import weakref
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ngrams(text_col: str, n: int) -> Column:
-    """Array of word n-grams of ``text_col`` (single-space tokens); docs
-    shorter than n words produce no n-grams (nothing to match). One
-    shared tokenization convention with the repetition signals — change
-    it in repetition.word_ngrams and both q66 and q67 move together."""
-    from .repetition import word_ngrams
-
-    return word_ngrams(text_col, n)
+from .repetition import word_ngrams
 
 
 def _bloom_positions(h: np.ndarray, m_bits: int, k: int) -> np.ndarray:
@@ -90,7 +82,7 @@ def build_eval_bloom(
     shape as an aggregation, with a fixed-size partial."""
     if m_bits % 8 or m_bits <= 0:
         raise ValueError(f"m_bits must be a positive multiple of 8, got {m_bits}")
-    grams = eval_df.select(F.explode(_ngrams(text_col, n)).alias("g")).select(
+    grams = eval_df.select(F.explode(word_ngrams(text_col, n)).alias("g")).select(
         F.xxhash64("g").alias("h")
     )
 
@@ -202,12 +194,12 @@ def contaminated_docs(
         raise ValueError(f"prefilter must be None or 'bloom', got {prefilter!r}")
     key = (lambda c: F.xxhash64(c)) if hashed else (lambda c: c)
     eval_grams = (
-        eval_df.select(F.explode(_ngrams(text_col, n)).alias("g"))
+        eval_df.select(F.explode(word_ngrams(text_col, n)).alias("g"))
         .select(key(F.col("g")).alias("k"))
         .distinct()
     )
     train_grams = train_df.select(
-        id_col, F.explode(_ngrams(text_col, n)).alias("g")
+        id_col, F.explode(word_ngrams(text_col, n)).alias("g")
     ).select(id_col, F.col("g"), key(F.col("g")).alias("k"))
     if prefilter == "bloom":
         bitmap = build_eval_bloom(eval_df, n, text_col, bloom_bits, bloom_k)

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.html import html_title, html_to_text
-from ..functions.text import token_count
+from ..functions.text import token_count, tokens
 from ..functions.url import url_host, url_normalize
 
 
@@ -54,7 +54,7 @@ def extract_crawl_columns(
         # tokens, so a tags-only page can actually be gated out
         "n_tokens",
         F.when(F.col("text") == "", F.lit(0))
-        .otherwise(token_count("text"))
+        .otherwise(token_count(tokens("text")))
         .cast("long"),
     )
 

@@ -60,10 +60,10 @@ has no curation pipeline.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, token_count
+from ..functions.text import fingerprint, let_bound, token_count, tokens
 from .cache import attach_cleanup, barrier
 from .contamination import contaminated_docs
 from .sampling import resample_to_mixture
@@ -173,10 +173,13 @@ def curate_corpus(
     else:
         out = df
 
-    tc = token_count(text_col)
-    out = out.filter(tc >= min_tokens)
-    if max_tokens is not None:
-        out = out.filter(tc <= max_tokens)
+    # both bounds read one token count per row: let_bound, because
+    # filter pushdown would inline a projected count into each bound
+    def _gate(tc: Column) -> Column:
+        ok = tc >= min_tokens
+        return ok if max_tokens is None else ok & (tc <= max_tokens)
+
+    out = out.filter(let_bound(token_count(tokens(text_col)), _gate))
 
     if max_top_gram_frac is not None or max_dup_gram_frac is not None:
         from .repetition import repetition_filter

@@ -1753,6 +1753,21 @@ _WINDOW_FP = {
 }
 
 
+def window_fps(toks: Column | str, k: int, fingerprint: str) -> Column:
+    """Fingerprints of every k-token window (starts 1..n-k+1, empty
+    below k tokens) of a PROJECTED token-array column: the transform
+    lambda reads it, and an unbound split would re-run per window."""
+    fp_of, fp_arr_type = _WINDOW_FP[fingerprint]
+    npos = F.size(toks) - F.lit(k) + F.lit(1)
+    return F.when(
+        npos >= 1,
+        F.transform(
+            F.sequence(F.lit(1), npos),
+            lambda i: fp_of(F.array_join(F.slice(toks, i, k), " ")),
+        ),
+    ).otherwise(F.array().cast(fp_arr_type))
+
+
 def merged_dup_intervals(dup_pos, k: int):
     """Fold a SORTED array of duplicate-window start positions (each
     covering ``[p, p+k)``) into merged disjoint ``[s, e)`` interval
@@ -1878,23 +1893,13 @@ def substring_dedup(
         )
     if keep not in ("first", "none"):
         raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    fp_of, fp_arr_type = _WINDOW_FP[fingerprint]
 
-    toks = F.split(F.col(text_col), " ")
     base = df.select(F.col(id_col).alias("id"), F.col(text_col)).withColumn(
-        "_toks", toks
+        "_toks", tokens(text_col)
     )
-    npos = F.size("_toks") - F.lit(k) + F.lit(1)  # windows start 1..npos
-    win_fps = F.when(
-        npos >= 1,
-        F.transform(
-            F.sequence(F.lit(1), npos),
-            lambda i: fp_of(F.array_join(F.slice("_toks", i, k), " ")),
-        ),
-    ).otherwise(F.array().cast(fp_arr_type))
     # (id, pos, fp) — pos is the 0-BASED window start
     wins = base.select(
-        "id", F.posexplode(win_fps).alias("pos", "fp")
+        "id", F.posexplode(window_fps("_toks", k, fingerprint)).alias("pos", "fp")
     )
     if keep == "first":
         firsts = wins.groupBy("fp").agg(

@@ -26,7 +26,7 @@ corpus's model with add-one smoothing for unseen tokens.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
@@ -122,6 +122,19 @@ def score_against(
     )
 
 
+def _adjacent_pairs(toks: Column | str) -> Column:
+    """array<struct<w1, w2>> of adjacent tokens, empty below two tokens.
+    ``toks`` is a projected token-array column, so each row splits once."""
+    n = F.size(toks)
+    return F.when(
+        n >= 2,
+        F.arrays_zip(
+            F.slice(toks, 1, n - 1).alias("w1"),
+            F.slice(toks, 2, n - 1).alias("w2"),
+        ),
+    ).otherwise(F.array())
+
+
 def bigram_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(w1, w2) adjacent-token pairs, one row per occurrence — the
     JVM-side explode both bigram passes share.
@@ -136,15 +149,9 @@ def bigram_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     (caught r14 by reading the executed plan: 3 corpus scans where
     the docstring promised 2; the dsir.py bucket column hit the same
     trap). Plan-pinned in test_lm.py."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    pairs = F.arrays_zip(
-        F.slice(toks, 1, n - 1).alias("w1"),
-        F.slice(toks, 2, n - 1).alias("w2"),
-    )
     return (
-        df.filter(n >= 2)
-        .select(F.explode(pairs).alias("p"))
+        df.select(tokens(text_col).alias("__toks"))
+        .select(F.explode(_adjacent_pairs("__toks")).alias("p"))
         .select(
             F.coalesce(F.col("p.w1"), F.lit("")).alias("w1"),
             F.coalesce(F.col("p.w2"), F.lit("")).alias("w2"),
@@ -185,19 +192,10 @@ def bigram_logprob_scores(
     if broadcast_vocab:
         model = F.broadcast(model)
 
-    toks = tokens(text_col)
-    n = F.size(toks)
     doc_pairs = df.select(
-        F.col(id_col),
-        F.when(
-            n >= 2,
-            F.arrays_zip(
-                F.slice(toks, 1, n - 1).alias("w1"),
-                F.slice(toks, 2, n - 1).alias("w2"),
-            ),
-        ).otherwise(F.array()).alias("pairs"),
+        F.col(id_col), tokens(text_col).alias("__toks")
     ).select(
-        id_col, F.explode_outer("pairs").alias("p")
+        id_col, F.explode_outer(_adjacent_pairs("__toks")).alias("p")
     ).select(
         id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
 from .cache import attach_cleanup, barrier
 from .ranking import with_global_running_sum
 
@@ -148,15 +149,15 @@ def chunk_documents(
             f"need 0 <= overlap < chunk_tokens, got overlap={overlap}"
         )
     stride = chunk_tokens - overlap
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
+    n = F.size("__toks")
     w, s = F.lit(chunk_tokens), F.lit(stride)
     n_chunks = F.when(n <= w, F.lit(1)).otherwise(
         F.lit(1) + F.floor((n - w + s - F.lit(1)) / s)
     )
-    base = df.select(
-        F.col(id_col),
-        toks.alias("__toks"),
+    # one projected token array feeds the chunk count and every slice
+    base = df.select(F.col(id_col), tokens(text_col).alias("__toks")).select(
+        id_col,
+        "__toks",
         n.alias("__n"),
         F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
     )

@@ -31,21 +31,27 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import let_bound, tokens
+
 
 def word_ngrams(text_col: Column | str, n: int) -> Column:
-    """Array of word n-grams (single-space tokens, single-space joined —
-    the same convention as contamination._ngrams and the DuckDB oracles'
-    string_split(text, ' ')). Docs with fewer than ``n`` tokens yield an
-    empty array."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(c, " ")
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """Array of word n-grams: `text.tokens` tokens joined by single
+    spaces — the n-grams contamination matches and the DuckDB oracles
+    rebuild from string_split(text, ' '). Docs with fewer than ``n``
+    tokens yield an empty array. The token array is a `let_bound`
+    lambda variable: an unbound split inside the transform would re-run
+    once per n-gram."""
+
+    def _grams(toks: Column) -> Column:
+        return F.when(
+            F.size(toks) >= n,
+            F.transform(
+                F.sequence(F.lit(0), F.size(toks) - n),
+                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>"))
+
+    return let_bound(tokens(text_col), _grams)
 
 
 def repetition_signals(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, token_count
+from ..functions.text import fingerprint, token_count, tokens
 from .ranking import exact_percentiles
 
 
@@ -54,7 +54,7 @@ def corpus_report(
 
     Tie-break for the percentiles is (value, id) so the picked row is
     deterministic and engine-portable."""
-    tc = token_count(text_col).alias("__tc")
+    tc = token_count(tokens(text_col)).alias("__tc")
     # ONE corpus pass feeds every text-side metric (r16, the q73 REST
     # probe's own adjudication): the slim (id, token_count, fp[,
     # stratum]) base is persisted and EAGERLY filled — count() first,

@@ -387,26 +387,27 @@ def q16_doc_profile(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.lm import perplexity_buckets
 
     d = spark.read.parquet(f"{sf}/documents.parquet")
-    clf = score_column("text", n_buckets=1 << 18, seed=0, bias=0.0)
+    toks = F.col("__toks")  # one projected token array for every stat
+    clf = score_column(toks, n_buckets=1 << 18, seed=0, bias=0.0)
     # perplexity_buckets carries (doc_id, text, lang) through, so the
     # profile projection rides ITS output — no second documents scan
     # and no extra profile⋈tier join.
     ppl = perplexity_buckets(
         d.select("doc_id", "text", "lang"), n_buckets=3, stratum_col="lang"
     )
-    return ppl.select(
+    return ppl.withColumn("__toks", text.tokens("text")).select(
         "doc_id",
         text.char_count("text").cast("long").alias("n_chars_calc"),
-        text.token_count("text").cast("long").alias("n_tokens"),
-        text.uniq_token_count("text").cast("long").alias("n_uniq_tokens"),
-        text.type_token_ratio("text").alias("ttr"),
-        text.stopword_count("text").cast("long").alias("n_stopwords"),
-        text.stopword_ratio("text").alias("stop_ratio"),
-        text.quality_score("text").alias("quality"),
+        text.token_count(toks).cast("long").alias("n_tokens"),
+        text.uniq_token_count(toks).cast("long").alias("n_uniq_tokens"),
+        text.type_token_ratio(toks).alias("ttr"),
+        text.stopword_count(toks).cast("long").alias("n_stopwords"),
+        text.stopword_ratio(toks).alias("stop_ratio"),
+        text.quality_score(toks).alias("quality"),
         F.round(clf, 6).alias("clf_score"),
         F.round(sigmoid(clf), 6).alias("clf_prob"),
         "lang",
-        text.lang_id("text").alias("lang_pred"),
+        text.lang_id(toks).alias("lang_pred"),
         "logprob",
         F.col("ppl_tier").cast("int").alias("ppl_tier"),
         "ppl_bucket",
@@ -1435,7 +1436,7 @@ def q64_sequence_packing(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.packing import pack_bpe_corpus, pack_chunks
 
     d = spark.read.parquet(f"{sf}/documents.parquet")
-    docs = d.select("doc_id", F.size(F.split("text", " ")).alias("n_tokens"))
+    docs = d.select("doc_id", text.token_count(text.tokens("text")).alias("n_tokens"))
     ws = pack_chunks(docs, 512).select(
         "doc_id", "chunk_id", "piece_start", "piece_end", "chunk_pos",
         F.lit("").alias("seq_fp"),

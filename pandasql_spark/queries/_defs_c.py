@@ -870,13 +870,15 @@ def q88_line_dedup(spark: SparkSession, sf: str) -> SparkDataFrame:
     from pandasql_spark.operators.dedup import line_dedup, substring_dedup
 
     d = spark.read.parquet(f"{sf}/documents.parquet").select("doc_id", "text")
-    toks = F.split(F.col("text"), " ")
+    toks = F.col("tok")  # projected: an unbound split re-runs per line
     n_lines = F.floor((F.size(toks) + 7) / F.lit(8)).cast("int")
     line_arr = F.transform(
         F.sequence(F.lit(0), n_lines - 1),
         lambda i: F.array_join(F.slice(toks, i * 8 + 1, 8), " "),
     )
-    lined = d.select("doc_id", F.array_join(line_arr, "\n").alias("text"))
+    lined = d.select("doc_id", text.tokens("text").alias("tok")).select(
+        "doc_id", F.array_join(line_arr, "\n").alias("text")
+    )
     out = line_dedup(lined, keep="first")
     sub = substring_dedup(d, k=20, fingerprint="xxhash")
     return out.select(

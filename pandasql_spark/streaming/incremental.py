@@ -53,10 +53,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandasql_spark.functions.text import let_bound, tokens
 from pandasql_spark.operators.dedup import (
     band_table,
+    merged_dup_intervals,
     minhash_signatures,
     signature_est_jaccard,
+    window_fps,
 )
 
 DOC_SCHEMA = "doc_id long, text string"
@@ -410,32 +413,22 @@ def process_substring_batch(
     ``batch_id < current`` (a retry must not see its own previous
     write) and every write is a dynamic partition overwrite of the
     batch's own partition."""
-    from pandasql_spark.operators.dedup import _WINDOW_FP
-
     if fingerprint not in ("xxhash", "xxhash128"):
         raise ValueError(
             "store fingerprints must be JVM-hash keys: 'xxhash' or "
             f"'xxhash128', got {fingerprint!r}"
         )
     _check_store_fp_method(store_dir, fingerprint)
-    fp_of, fp_arr_type = _WINDOW_FP[fingerprint]
     fp_store_type = (
         "long" if fingerprint == "xxhash" else "struct<h1:bigint,h2:bigint>"
     )
     spark = batch.sparkSession
     batch = batch.dropDuplicates([id_col]).persist()
 
-    toks = F.split(F.col(text_col), " ")
-    npos = F.size(toks) - F.lit(k) + F.lit(1)
-    win_fps = F.when(
-        npos >= 1,
-        F.transform(
-            F.sequence(F.lit(1), npos),
-            lambda i: fp_of(F.array_join(F.slice(toks, i, k), " ")),
-        ),
-    ).otherwise(F.array().cast(fp_arr_type))
     wins = batch.select(
-        F.col(id_col).alias("id"), F.posexplode(win_fps).alias("pos", "fp")
+        F.col(id_col).alias("id"), tokens(text_col).alias("_toks")
+    ).select(
+        "id", F.posexplode(window_fps("_toks", k, fingerprint)).alias("pos", "fp")
     )
 
     hist = _read_or_empty(
@@ -458,16 +451,13 @@ def process_substring_batch(
         F.sort_array(F.collect_list("pos")).alias("_dup_pos"),
         F.count(F.lit(1)).cast("long").alias("sub_dup_windows"),
     )
-    from pandasql_spark.functions.text import let_bound
-    from pandasql_spark.operators.dedup import merged_dup_intervals
-
     joined = (
         batch.select(F.col(id_col).alias("id"), text_col)
         .join(dup_pos, "id", "left")
         .withColumn(
             "_dup_pos", F.coalesce("_dup_pos", F.array().cast("array<int>"))
         )
-        .withColumn("_toks", toks)
+        .withColumn("_toks", tokens(text_col))
     )
     # let_bound is LOAD-BEARING (see operators/dedup.substring_dedup):
     # without it projection collapse inlines the interval fold into the

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -28,6 +29,13 @@ def spark():
     yield s
 
 
+def _nan_for_missing(df: pd.DataFrame) -> pd.DataFrame:
+    """One missing-value marker on both sides: Spark returns None where
+    pandas holds NaN in object columns, and pandas is deprecating
+    treating the two as equal. Missing still equals missing."""
+    return df.apply(lambda s: s.where(s.notna(), np.nan) if s.dtype == object else s)
+
+
 def assert_frame_equals_pandas(result, expected: pd.DataFrame, check_row_order=False):
     """Reference comparison semantics (tests/utils.py:5-25): reset index,
     sort columns by name, compare. Row order only when asked (post-sort)."""
@@ -36,8 +44,8 @@ def assert_frame_equals_pandas(result, expected: pd.DataFrame, check_row_order=F
         got = got.to_frame()
     if isinstance(expected, pd.Series):
         expected = expected.to_frame()
-    got = got.reset_index(drop=True).sort_index(axis=1)
-    expected = expected.reset_index(drop=True).sort_index(axis=1)
+    got = _nan_for_missing(got.reset_index(drop=True).sort_index(axis=1))
+    expected = _nan_for_missing(expected.reset_index(drop=True).sort_index(axis=1))
     if not check_row_order:
         cols = list(got.columns)
         got = got.sort_values(cols, ignore_index=True)

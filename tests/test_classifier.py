@@ -11,6 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from pandasql_spark.functions.text import tokens
 from pandasql_spark.operators.classifier import (
     _MIX,
     _MOD,
@@ -124,14 +125,14 @@ def test_custom_weight_fn_and_validation(spark):
     out = linear_quality_score(docs)  # defaults run
     assert {"clf_score", "clf_prob"} <= set(out.columns)
     # constant weight fn: score == bias + n_tokens * c
-    col = score_column("text", weight_fn=lambda b: F.lit(0.5))
+    col = score_column(tokens("text"), weight_fn=lambda b: F.lit(0.5))
     got = {
         r.doc_id: r.s
         for r in docs.select("doc_id", col.alias("s")).collect()
     }
     assert got[0] == 0.5 * 4 and got[2] == 0.5  # '' is one token
     with pytest.raises(ValueError, match="n_buckets"):
-        score_column("text", n_buckets=0)
+        score_column(tokens("text"), n_buckets=0)
 
 
 def _py_train(texts, ys, n_buckets, epochs, lr, l2=0.0, normalize=True):

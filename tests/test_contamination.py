@@ -207,15 +207,15 @@ def test_bloom_bitmap_selectivity(corpora, spark):
     train, evald, _ = corpora
     bm = build_eval_bloom(evald, n=5, m_bits=1 << 20, k=5)
     member = bloom_member_column(spark.sparkContext, bm, 1 << 20, 5)
-    from pandasql_spark.operators.contamination import _ngrams
+    from pandasql_spark.operators.repetition import word_ngrams
 
-    grams = train.select(F.explode(_ngrams("text", 5)).alias("g")).select(
+    grams = train.select(F.explode(word_ngrams("text", 5)).alias("g")).select(
         "g", member(F.xxhash64("g")).alias("m")
     )
     got = {r.g: r.m for r in grams.collect()}
     eval_grams = {
         r.g
-        for r in evald.select(F.explode(_ngrams("text", 5)).alias("g")).collect()
+        for r in evald.select(F.explode(word_ngrams("text", 5)).alias("g")).collect()
     }
     for g, m in got.items():
         if g in eval_grams:

@@ -131,9 +131,9 @@ def test_all_stages_together(spark):
         assert out.count() > 0
         # redaction ran (idempotent on this clean corpus: text unchanged
         # in shape) and every survivor satisfies the quality gate
-        from pandasql_spark.functions.text import token_count
+        from pandasql_spark.functions.text import token_count, tokens
 
-        assert out.filter(token_count("text") < 30).count() == 0
+        assert out.filter(token_count(tokens("text")) < 30).count() == 0
     finally:
         out.unpersist()
 
@@ -149,9 +149,10 @@ def test_pipeline_on_real_corpus_monotone(spark):
     n_cur = curated.count()
     assert 0 < n_cur < n_tr
     # survivors still satisfy the quality gate
-    from pandasql_spark.functions.text import token_count
+    from pandasql_spark.functions.text import token_count, tokens
 
-    bad = curated.filter((token_count("text") < 40) | (token_count("text") > 65))
+    tc = token_count(tokens("text"))
+    bad = curated.filter((tc < 40) | (tc > 65))
     assert bad.count() == 0
 
 

@@ -59,7 +59,9 @@ def test_dhash_flat_is_zero():
 def test_dhash_copies_close_noise_far(corpus):
     got = {r.media_id: r for r in image_dhash(corpus).collect()}
     assert got[5].decode_ok is False and got[5].dhash is None
-    h = {i: np.uint64(got[i].dhash) for i in (1, 2, 3, 4)}
+    # signed int64 → its unsigned 64-bit pattern (np.uint64 of a
+    # negative value is deprecated in NumPy)
+    h = {i: got[i].dhash & 0xFFFFFFFFFFFFFFFF for i in (1, 2, 3, 4)}
 
     def ham(a, b):
         return bin(int(a) ^ int(b)).count("1")
@@ -135,7 +137,7 @@ def test_phash_copies_close_noise_far(spark):
     ]
     df = spark.createDataFrame(rows, "media_id long, payload binary")
     got = {
-        r.media_id: np.uint64(r.dhash)
+        r.media_id: r.dhash & 0xFFFFFFFFFFFFFFFF
         for r in image_dhash(df, method="phash").collect()
     }
 

@@ -10,6 +10,7 @@ import pytest
 
 from pandasql_spark.plans import (
     broadcast_join_count,
+    explain_str,
     operator_names,
     pushed_filters,
     read_schemas,
@@ -69,8 +70,6 @@ def test_join_groupby_single_shuffle(spark):
 
 
 def test_whole_stage_codegen_covers_scan_filter(spark):
-    from pandasql_spark.plans import explain_str
-
     # shuffle-free filter+project pipeline: with an Exchange in the plan
     # (q02's distinct), AQE hides codegen stars until the final plan, so
     # assert on the pure scan→filter→project shape the test is about.
@@ -185,8 +184,6 @@ def test_heavy_hitters_broadcast_verify_no_domain_shuffle(spark):
 def test_sequence_packing_no_single_partition_window(spark):
     """q64's running sum must use the range-partitioned recipe — a
     SinglePartition Exchange would mean the global window snuck back."""
-    from pandasql_spark.plans import explain_str
-
     plan = explain_str(_q(spark, "q64_sequence_packing"), "formatted")
     assert "SinglePartition" not in plan, plan
 
@@ -206,8 +203,6 @@ def test_mixture_resample_broadcasts_targets_and_prunes(spark):
     no shuffle ranks rows the join would discard."""
     df = _q(spark, "q70_mixture_resample")
     assert broadcast_join_count(df) >= 1, operator_names(df)
-    from pandasql_spark.plans import explain_str
-
     plan = explain_str(df, "formatted")
     assert "PushedFilters: [" in plan and "In(lang" in plan.replace("IsNotNull(lang), ", ""), plan
 
@@ -216,8 +211,6 @@ def test_corpus_report_percentiles_use_range_partitioning(spark):
     """q73's exact percentiles must ride the range-partitioned ranking
     recipe (RangePartitioning exchange + per-partition sort), never a
     single-reducer global sort of the corpus."""
-    from pandasql_spark.plans import explain_str
-
     plan = explain_str(_q(spark, "q73_corpus_report"), "formatted")
     assert "rangepartitioning" in plan.lower(), plan
 
@@ -262,6 +255,31 @@ def test_doc_profile_perplexity_fold_plan(spark):
     # checkpointed slim RDD feeding both quantile branches
     assert ops.get("Scan", 0) >= 2, dict(ops)
     assert shuffle_count(df) <= 2, operator_names(df)
+    # tokenize once: every stat and the classifier fold read one
+    # projected token array, so the plan splits each row once
+    assert explain_str(df).count("split(") == 1
+
+
+def test_whitespace_split_only_in_text_module():
+    """One tokenizer: every single-space split in the engine goes
+    through functions/text.py:tokens (Python-side ``str.split`` in
+    Arrow kernels and the oracles' SQL ``string_split`` are not
+    Spark column splits and do not match)."""
+    import pathlib
+    import re
+
+    import pandasql_spark
+
+    pat = re.compile(
+        r"(?:\bF\.|(?<![\w.]))split\((?:[^()]|\([^()]*\))*?,\s*(\"|') \1\s*\)"
+    )
+    root = pathlib.Path(pandasql_spark.__file__).parent
+    hits = sorted(
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if pat.search(p.read_text())
+    )
+    assert hits == ["functions/text.py"]
 
 
 def test_multimodal_resize_fold_single_corpus_render(spark):
@@ -300,8 +318,6 @@ def test_line_dedup_with_substring_fold_plan(spark):
     the whole plan — line_dedup's; zero from substring_dedup)."""
     from collections import Counter
 
-    from pandasql_spark.plans import explain_str
-
     df = _q(spark, "q88_line_dedup")
     plan = explain_str(df)
     ops = Counter(operator_names(df))
@@ -322,8 +338,6 @@ def test_q64_pack_bpe_fold_plan(spark):
     single-reducer global window)."""
     from collections import Counter
 
-    from pandasql_spark.plans import explain_str
-
     df = _q(spark, "q64_sequence_packing")
     plan = explain_str(df)
     ops = Counter(operator_names(df))
@@ -339,8 +353,6 @@ def test_q94_unicode_fold_plan(spark):
     scan, exactly ONE Arrow kernel (the NFC normalizer — stripping
     stays codegen), no row-at-a-time Python, no cartesian."""
     from collections import Counter
-
-    from pandasql_spark.plans import explain_str
 
     df = _q(spark, "q94_crawl_pipeline")
     plan = explain_str(df)
@@ -378,8 +390,6 @@ def test_q64_bpe_reattach_never_broadcasts_tokens(spark):
     plan-wide: the shuffled-hash join is present and no broadcast join
     exists anywhere in the query."""
     df = _q(spark, "q64_sequence_packing")
-    from pandasql_spark.plans import explain_str
-
     plan = explain_str(df)
     assert "ShuffledHashJoin" in plan, plan[:2000]
     assert "BroadcastHashJoin" not in plan, plan[:2000]
@@ -393,8 +403,6 @@ def test_q91_grouped_rank_exchange_is_slim(spark):
     on every row (one third of the exchange). The rank-window exchange
     must carry exactly [group, value]."""
     import re
-
-    from pandasql_spark.plans import explain_str
 
     plan = explain_str(_q(spark, "q91_quantile_normalize"), "formatted")
     m = re.search(

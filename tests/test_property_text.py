@@ -76,19 +76,18 @@ def _py_lang(s: str, profiles) -> str:
 )
 @given(docs=st.lists(texts(), min_size=1, max_size=8), k=st.integers(1, 4))
 def test_text_functions_match_python_reference(spark, docs, k):
-    import pyspark.sql.functions as F
-
     sdf = spark.createDataFrame(pd.DataFrame({"text": docs}))
+    toks = tx.tokens("text")
     got = sdf.select(
         "text",
-        tx.token_count("text").alias("tc"),
-        tx.uniq_token_count("text").alias("utc"),
-        tx.stopword_count("text").alias("sc"),
+        tx.token_count(toks).alias("tc"),
+        tx.uniq_token_count(toks).alias("utc"),
+        tx.stopword_count(toks).alias("sc"),
         tx.fingerprint("text").alias("fp"),
-        tx.lang_id("text").alias("lang"),
+        tx.lang_id(toks).alias("lang"),
         tx.word_shingles("text", k).alias("sh"),
         tx.winnowing_fingerprints("text", k, 4).alias("wf"),
-        tx.quality_score("text").alias("q"),
+        tx.quality_score(toks).alias("q"),
     ).toPandas()
 
     sw = set(tx.DEFAULT_STOPWORDS)
