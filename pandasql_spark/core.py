@@ -520,7 +520,13 @@ class BaseFrame:
         """Estimated result size in bytes (reference ``memory_usage``,
         core.py:70-82, deep pandas usage of the cached result). Ours is
         the optimizer's size-in-bytes statistic — available WITHOUT
-        materializing, which is the only sane contract at 100 TB."""
+        materializing, which is the only sane contract at 100 TB.
+
+        It is Catalyst's plan estimate without cost-based optimization,
+        which multiplies through joins and can overshoot by orders of
+        magnitude: a 1000×1000 merge on one key with a ~24 kB result
+        reports 460.8 MB. It is no bound on what ``compute()`` may
+        fetch; that bound is ``spark.driver.maxResultSize``."""
         sdf = self.to_spark()
         return int(sdf._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 

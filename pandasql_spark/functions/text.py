@@ -95,7 +95,9 @@ def lang_id(
     """Marker-word language ID over a `tokens` array: count hits per
     language profile, pick the argmax (ties broken by profile order),
     ``default`` when no profile scores. One pass over the token array
-    per language — all JVM-side."""
+    per language — all JVM-side. The scores are `let_bound` as one
+    array, so the plan filters once per profile however often the
+    argmax reads a score."""
 
     def _hits(words: Sequence[str]):
         wl = list(words)
@@ -103,16 +105,20 @@ def lang_id(
         # F.filter as (element, index) and silently misbehave.
         return F.size(F.filter(toks, lambda t: t.isin(wl)))
 
-    scores = {lang: _hits(words) for lang, words in profiles.items()}
-    # deterministic argmax: fold back-to-front with >= so that earlier
-    # profiles win ties; a language needs at least one marker hit.
-    best = F.lit(default)
-    best_score = F.lit(0)
-    for lang in reversed(list(profiles)):
-        s = scores[lang]
-        best = F.when((s >= F.lit(1)) & (s >= best_score), F.lit(lang)).otherwise(best)
-        best_score = F.greatest(best_score, s)
-    return best
+    langs = list(profiles)
+
+    def _argmax(scores: Column) -> Column:
+        # deterministic argmax: fold back-to-front with >= so that
+        # earlier profiles win ties; a language needs at least one hit.
+        best = F.lit(default)
+        best_score = F.lit(0)
+        for i in reversed(range(len(langs))):
+            s = scores[i]
+            best = F.when((s >= F.lit(1)) & (s >= best_score), F.lit(langs[i])).otherwise(best)
+            best_score = F.greatest(best_score, s)
+        return best
+
+    return let_bound(F.array(*(_hits(profiles[lang]) for lang in langs)), _argmax)
 
 
 def normalize_text(col: Column | str) -> Column:

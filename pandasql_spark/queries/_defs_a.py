@@ -388,14 +388,16 @@ def q16_doc_profile(spark: SparkSession, sf: str) -> SparkDataFrame:
 
     d = spark.read.parquet(f"{sf}/documents.parquet")
     toks = F.col("__toks")  # one projected token array for every stat
-    clf = score_column(toks, n_buckets=1 << 18, seed=0, bias=0.0)
+    clf = F.col("__clf")  # one projected fold for the score and sigmoid
     # perplexity_buckets carries (doc_id, text, lang) through, so the
     # profile projection rides ITS output — no second documents scan
     # and no extra profile⋈tier join.
     ppl = perplexity_buckets(
         d.select("doc_id", "text", "lang"), n_buckets=3, stratum_col="lang"
     )
-    return ppl.withColumn("__toks", text.tokens("text")).select(
+    return ppl.withColumn("__toks", text.tokens("text")).withColumn(
+        "__clf", score_column(toks, n_buckets=1 << 18, seed=0, bias=0.0)
+    ).select(
         "doc_id",
         text.char_count("text").cast("long").alias("n_chars_calc"),
         text.token_count(toks).cast("long").alias("n_tokens"),
@@ -1105,6 +1107,7 @@ def q59_stream_sink_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
     the end-to-end exactly-once contract, value-checked. Seventh
     streaming gate surface."""
     import os
+    import shutil
     import tempfile
 
     from pandasql_spark.streaming.events import EVENT_SCHEMA
@@ -1115,17 +1118,23 @@ def q59_stream_sink_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
     base = tempfile.mkdtemp(prefix="q59_sink_")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
 
-    for _ in range(2):  # second start = restart from checkpoint
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(stage)
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    try:
+        for _ in range(2):  # second start = restart from checkpoint
+            stream = spark.readStream.schema(EVENT_SCHEMA).parquet(stage)
+            q = (
+                stream.writeStream.format("parquet")
+                .option("path", out)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    finally:
+        # the returned frame reads `out` lazily (through its
+        # _spark_metadata log), so only the stage and checkpoint go
+        shutil.rmtree(stage, ignore_errors=True)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(

@@ -257,7 +257,14 @@ def test_doc_profile_perplexity_fold_plan(spark):
     assert shuffle_count(df) <= 2, operator_names(df)
     # tokenize once: every stat and the classifier fold read one
     # projected token array, so the plan splits each row once
-    assert explain_str(df).count("split(") == 1
+    plan = explain_str(df)
+    assert plan.count("split(") == 1
+    # score once: the profile projection above the last join filters
+    # once per lang_id profile (4) and per stopword stat (3), and folds
+    # the classifier once for both clf_score and clf_prob
+    profile = plan.rsplit(") BroadcastHashJoin\n", 1)[1]
+    assert profile.count("filter(") == 7
+    assert profile.count("aggregate(") == 1
 
 
 def test_whitespace_split_only_in_text_module():
