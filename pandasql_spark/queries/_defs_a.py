@@ -1020,14 +1020,13 @@ def q48_write_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
     the same aggregate on the ORIGINAL table, so a green row proves the
     write→read cycle is lossless for every column it carries — the
     first gate coverage for a writer (they were pytest-only)."""
-    import tempfile
-
+    from pandasql_spark.session import scratch_dir
     from pandasql_spark.sources.io import write_compacted
 
     li = spark.read.parquet(f"{sf}/lineitem.parquet").filter(
         F.col("l_shipdate") <= "1995-12-31"
     ).select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag")
-    out_dir = tempfile.mkdtemp(prefix="q48_roundtrip_") + "/part"
+    out_dir = scratch_dir("q48_roundtrip_") + "/part"
     write_compacted(li, out_dir, target_file_mb=64)
     back = spark.read.parquet(out_dir)
     return back.groupBy("l_returnflag").agg(
@@ -1059,14 +1058,13 @@ def q55_csv_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
     green row proves the CSV round-trip preserves values AND that
     inference recovers workable types (timestamps survive via ISO
     format; doubles via plain notation)."""
-    import tempfile
-
+    from pandasql_spark.session import scratch_dir
     from pandasql_spark.sources.io import read_csv
 
     ev = load_events(spark, sf).filter(F.col("event_type") != "").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    out_dir = tempfile.mkdtemp(prefix="q55_csv_") + "/part"
+    out_dir = scratch_dir("q55_csv_") + "/part"
     ev.write.mode("overwrite").option("header", True).option(
         "timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
     ).csv(out_dir)
@@ -1105,36 +1103,25 @@ def q59_stream_sink_roundtrip(spark: SparkSession, sf: str) -> SparkDataFrame:
     read the sink back and aggregate. The oracle aggregates the source,
     so a green row proves no loss AND no duplication across restart —
     the end-to-end exactly-once contract, value-checked. Seventh
-    streaming gate surface."""
-    import os
-    import shutil
-    import tempfile
+    streaming gate surface. The sink dir stays until interpreter exit:
+    the returned frame reads it lazily, through its _spark_metadata
+    log."""
+    from pandasql_spark.session import scratch_dir
+    from pandasql_spark.streaming.events import (
+        EVENT_SCHEMA,
+        link_stage,
+        run_bounded,
+        write_stream_parquet,
+    )
 
-    from pandasql_spark.streaming.events import EVENT_SCHEMA
-
-    events_path = f"{sf}/events.parquet"
-    stage = tempfile.mkdtemp(prefix="q59_src_")
-    os.symlink(os.path.abspath(events_path), os.path.join(stage, "events.parquet"))
-    base = tempfile.mkdtemp(prefix="q59_sink_")
+    stage = link_stage(f"{sf}/events.parquet", "q59_src_")
+    base = scratch_dir("q59_sink_")
     out, ckpt = f"{base}/out", f"{base}/ckpt"
-
-    try:
-        for _ in range(2):  # second start = restart from checkpoint
-            stream = spark.readStream.schema(EVENT_SCHEMA).parquet(stage)
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # the returned frame reads `out` lazily (through its
-        # _spark_metadata log), so only the stage and checkpoint go
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+    # the second start is a restart from the checkpoint; it must
+    # replay nothing, and then the stage and checkpoint can go
+    for release in ((), (stage, ckpt)):
+        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(stage)
+        run_bounded(spark, write_stream_parquet(stream, out, ckpt), release)
 
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
@@ -1163,16 +1150,15 @@ def q60_zorder_pruned_scan(spark: SparkSession, sf: str) -> SparkDataFrame:
     layout exists) is measured in tests/test_zorder.py — a 10% box on
     the SECOND dimension touches a minority of z-ordered files but
     nearly all single-sort files."""
-    import tempfile
-
     from pandasql_spark.operators.zorder import write_zordered
+    from pandasql_spark.session import scratch_dir
 
     li = spark.read.parquet(f"{sf}/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
     )
     ok_max = li.agg(F.max("l_orderkey")).first()[0]
     pk_max = li.agg(F.max("l_partkey")).first()[0]
-    out = tempfile.mkdtemp(prefix="q60_z_") + "/t"
+    out = scratch_dir("q60_z_") + "/t"
     write_zordered(li, out, ["l_orderkey", "l_partkey"], num_files=16)
     back = spark.read.parquet(out)
     box = back.filter(

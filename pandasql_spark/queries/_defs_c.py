@@ -1703,7 +1703,7 @@ def q97_stream_admission(spark: SparkSession, sf: str) -> SparkDataFrame:
     - stage ``token_budget`` — admit_tokens_per_key_stream (the r14
       fold): lifetime running sum of ``value`` per event_type, key
       closed at first overflow, replayed as THREE (ts, event_id)-
-      ordered micro-batches (events.replay_time_ordered, the q99
+      ordered micro-batches (events.stage_time_ordered, the q99
       recipe) so the budget genuinely STRADDLES batch boundaries —
       the fractional `consumed` double state carries across batch
       edges (ADVICE r13 fix, now under the driver's oracle). The
@@ -1715,44 +1715,43 @@ def q97_stream_admission(spark: SparkSession, sf: str) -> SparkDataFrame:
       chunking the replay equals the batch closed form the oracle's
       cumsum window recomputes. Tenth gate-checked streaming
       surface."""
+    from pandasql_spark.session import scratch_dir
     from pandasql_spark.streaming.admission import (
         admit_per_key_stream,
         admit_tokens_per_key_stream,
     )
-    from pandasql_spark.streaming.events import replay_staged, stage_time_ordered
+    from pandasql_spark.streaming.events import (
+        EVENT_SCHEMA,
+        replay_to_memory,
+        stage_time_ordered,
+    )
 
     path = f"{sf}/events.parquet"
     # ONE staging write serves both replays (staging = a full sort+write
-    # of the table, the biggest fixed cost here): first_n collapses the
-    # staged chunks into a single micro-batch (files_per_trigger=None —
-    # the original _replay shape, intra-batch order from the operator's
-    # per-group sort), the token stage streams them one per batch. The
-    # shared staging dir is removed once both replays terminate — the
-    # memory sinks hold the rows (ADVICE r14: repeated runs were
-    # accumulating sorted event-table copies on disk).
-    import shutil
-
-    stage = stage_time_ordered(spark, path, n_batches=3)
-    try:
-        first_n = replay_staged(
-            spark,
-            stage,
-            lambda ev: admit_per_key_stream(ev, "event_type", 40),
-            "q97_admission_replay",
-            files_per_trigger=None,
-        )
-        total = spark.read.parquet(path).agg(F.sum("value")).first()[0]
-        budget = float(round(total / 10))
-        tokens = replay_staged(
-            spark,
-            stage,
-            lambda ev: admit_tokens_per_key_stream(
-                ev, "event_type", budget, "value"
-            ),
-            "q97_token_admission_replay",
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    # of the table, the biggest fixed cost here): first_n reads the
+    # staged chunks as a single micro-batch (the _replay shape,
+    # intra-batch order from the operator's per-group sort), the token
+    # stage streams them one per batch. The staging dir is removed once
+    # the second replay ends — the memory sinks hold the rows.
+    stage = scratch_dir("evchunks_")
+    per_chunk = stage_time_ordered(
+        spark.read.schema(EVENT_SCHEMA).parquet(path), 3, ["ts", "event_id"], stage
+    )
+    first_n = replay_to_memory(
+        spark,
+        admit_per_key_stream(
+            spark.readStream.schema(EVENT_SCHEMA).parquet(stage), "event_type", 40
+        ),
+        "q97_admission_replay",
+    )
+    total = spark.read.parquet(path).agg(F.sum("value")).first()[0]
+    budget = float(round(total / 10))
+    tokens = replay_to_memory(
+        spark,
+        admit_tokens_per_key_stream(per_chunk, "event_type", budget, "value"),
+        "q97_token_admission_replay",
+        release=[stage],
+    )
     cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
     return first_n.select(F.lit("first_n").alias("stage"), *cols).unionByName(
         tokens.select(F.lit("token_budget").alias("stage"), *cols)

@@ -33,11 +33,18 @@ Scale-minded defaults (tunable via ``get_spark(**conf)``):
   through ``FileContext``, while the ``FileSystem`` manager deletes the
   target first. Pass ``FileContextBasedCheckpointFileManager`` through
   ``get_spark(**conf)`` there; a session the host built keeps its own.
+
+Scratch directories — a replay's staged chunks, checkpoint and store, a
+round-trip query's written files — come from `scratch_dir`, which
+removes whatever is still there when the interpreter exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -144,6 +151,29 @@ def get_spark(app_name: str = "pandasql_spark", **conf: str) -> SparkSession:
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+_SCRATCH: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new directory ``<prefix>*`` in the temp dir, removed at
+    interpreter exit. Whoever is done with it sooner removes it sooner
+    (`streaming.events.run_bounded` does, for what a stream alone
+    reads); the exit pass covers the dirs a returned lazy frame still
+    reads and the ones a failed run left."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH.append(path)
+    return path
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    # exit handlers run last-in first-out, and this one is registered
+    # at import: a JVM that get_spark launched is stopped before the
+    # dirs go
+    for path in _SCRATCH:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def stop() -> None:

@@ -1,6 +1,11 @@
 """Structured Streaming surface (beyond-reference; SURVEY.md §2.8 notes
 the reference has no streaming at all — this is the Spark-native
-north-star addition over the `events` table)."""
+north-star addition over the `events` table).
+
+The sink builders (`write_stream_parquet`, `crawl_ingest_stream`,
+`incremental_neardup_dedup`) return a configured, unstarted
+DataStreamWriter. Start it with your own trigger for a live stream, or
+hand it to `run_bounded` to process what is staged and stop."""
 
 from .admission import admit_per_key_stream, admit_tokens_per_key_stream
 from .crawl_ingest import (
@@ -13,8 +18,10 @@ from .events import (
     dedup_event_stream,
     hourly_event_counts,
     read_event_stream,
+    run_bounded,
     session_windows,
     sliding_value_stats,
+    stage_time_ordered,
     user_running_totals,
     write_stream_parquet,
 )
@@ -45,4 +52,6 @@ __all__ = [
     "crawl_ingest_stream",
     "replay_crawl_ingest",
     "bounded_replay_shuffle",
+    "run_bounded",
+    "stage_time_ordered",
 ]

@@ -41,14 +41,15 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..functions.url import url_host
 from ..operators.crawl import extract_crawl_columns
+from ..session import scratch_dir
 from .admission import admit_per_key_stream
-from .events import bounded_replay_shuffle
+from .events import run_bounded, stage_time_ordered
 from .incremental import _read_or_empty
 
-CRAWL_SCHEMA = "doc_id long, url string, html string"
 #: extract_crawl_columns' output (the corpus sink's data columns)
 CORPUS_SCHEMA = (
     "doc_id long, url_norm string, host string, title string, "
@@ -134,9 +135,10 @@ def crawl_ingest_stream(
     html_col: str = "html",
     url_col: str = "url",
     id_col: str = "doc_id",
-    available_now: bool = True,
-):
-    """Start the streaming ingest; returns the StreamingQuery.
+) -> DataStreamWriter:
+    """Build the streaming ingest and return its configured
+    DataStreamWriter, unstarted: the caller picks the trigger and
+    starts it (`run_bounded` for a bounded replay).
     ``crawl_stream`` must carry (id_col, url_col, html_col)."""
     enriched = crawl_stream.withColumn("host", url_host(url_col))
     admitted = admit_per_key_stream(
@@ -157,14 +159,11 @@ def crawl_ingest_stream(
 
     # append, matching admit_per_key_stream's applyInPandasWithState
     # contract — Spark rejects that operator under Update output mode
-    writer = (
+    return (
         admitted.writeStream.foreachBatch(_process)
         .outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def replay_crawl_ingest(
@@ -180,43 +179,31 @@ def replay_crawl_ingest(
     doc_id-ordered parquet files (``maxFilesPerTrigger=1`` → one
     micro-batch each, arrival order = id order), run to completion,
     return the corpus — which must equal the batch closed form the q99
-    oracle recomputes."""
-    import tempfile
-
-    from .events import stage_ordered_chunks
-
+    oracle recomputes. Stage, store and checkpoint go when the replay
+    ends; the corpus dir, which the returned frame reads, at interpreter
+    exit."""
     n_rows = crawl_df.count()
     if n_rows < n_batches:
         raise ValueError(
             f"cannot stage {n_batches} non-empty micro-batches from "
             f"{n_rows} rows"
         )
-    work = tempfile.mkdtemp(prefix="crawl_ingest_")
-    stage = os.path.join(work, "stage")
+    work = scratch_dir("crawl_ingest_")
+    stage, store, ckpt, corpus = (
+        os.path.join(work, d) for d in ("stage", "store", "ckpt", "corpus")
+    )
     # ONE chunk-partitioned write (whatever rendered the crawl frame
     # runs once — no persist, no per-chunk filtered jobs)
-    stage_ordered_chunks(
+    stream = stage_time_ordered(
         crawl_df.select("doc_id", "url", "html"), n_batches, ["doc_id"], stage
     )
-    stream = (
-        spark.readStream.schema(CRAWL_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage, "*.parquet"))
+    run_bounded(
+        spark,
+        crawl_ingest_stream(
+            stream, store, corpus, ckpt, host_cap=host_cap, min_tokens=min_tokens
+        ),
+        release=(stage, store, ckpt),
     )
-    # bounded replay: cap the shuffle width (state-store instancing;
-    # measured at sf0.1: 17.6 s -> 6.5 s, identical output). The
-    # production entry point (crawl_ingest_stream) keeps the session's
-    # setting.
-    with bounded_replay_shuffle(spark):
-        q = crawl_ingest_stream(
-            stream,
-            store_dir=os.path.join(work, "store"),
-            corpus_dir=os.path.join(work, "corpus"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            host_cap=host_cap,
-            min_tokens=min_tokens,
-        )
-        q.awaitTermination()
     # explicit schema: a fully-filtered crawl (every page capped out,
     # deduped, or under the token gate) leaves a corpus dir with zero
     # part files, which schema INFERENCE rejects (UNABLE_TO_INFER_SCHEMA
@@ -224,6 +211,4 @@ def replay_crawl_ingest(
     # legitimate outcome. With no partition dirs there is also no
     # batch_id column, so the drop must tolerate its absence (it does —
     # drop of a missing column is a no-op).
-    return spark.read.schema(CORPUS_SCHEMA).parquet(
-        os.path.join(work, "corpus")
-    ).drop("batch_id")
+    return spark.read.schema(CORPUS_SCHEMA).parquet(corpus).drop("batch_id")

@@ -15,10 +15,21 @@ State-size notes per operator:
   state; optional ``ttl_seconds`` switches NoTimeout (state per user
   ever seen) to an event-time timeout that evicts idle users — bounded
   by active users at the cost of restarting returners.
+
+Bounded replays — how the gate drives these operators, and the crawl,
+dedup and heavy-hitter streams, through the real engine — all run
+through ONE runner, `run_bounded`: AvailableNow trigger, the replay
+shuffle cap, wait for the end, remove the dirs only the stream used.
+Their input is staged one of two ways: `link_stage` (symlinks to a
+file, one micro-batch per link) or `stage_time_ordered` (ordered
+chunks, one micro-batch per chunk). Every dir comes from
+`session.scratch_dir`.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 from contextlib import contextmanager
 from typing import Iterable
 
@@ -26,22 +37,26 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..session import scratch_dir
 
 
 @contextmanager
 def bounded_replay_shuffle(spark: SparkSession, n: int = 8):
-    """Cap ``spark.sql.shuffle.partitions`` for the duration of a
-    BOUNDED replay, then restore it. Replays are small by construction,
-    and stateful-streaming cost scales with state-store instances PER
-    PARTITION PER MICRO-BATCH (the conftest.py lesson; measured on the
-    crawl-ingest replay at sf0.1: 17.6 s → 6.5 s, identical output;
-    q76 windowed-KMV 3.2 s → 2.4 s, q97 admission 1.3 s → 1.1 s).
-    Production entry points never pass through here — an unbounded
-    stream keeps the session's width, where real state wants the
-    shards. No-op when the session is already at or under ``n``, as
-    every local session on up to ``n`` cores is (``get_spark`` sets one
-    shuffle partition per core).
+    """Cap ``spark.sql.shuffle.partitions`` while `run_bounded` starts
+    and runs a BOUNDED replay, then restore it. Replays are small by
+    construction, and stateful-streaming cost scales with state-store
+    instances PER PARTITION PER MICRO-BATCH (the conftest.py lesson;
+    measured on the crawl-ingest replay at sf0.1: 17.6 s → 6.5 s,
+    identical output; q76 windowed-KMV 3.2 s → 2.4 s, q97 admission
+    1.3 s → 1.1 s). A stateless stream with no shuffle (q59's file
+    sink) plans the same at any width. A stream its caller starts
+    itself — the unbounded production shape — keeps the session's
+    width, where real state wants the shards. No-op when the session is
+    already at or under ``n``, as every local session on up to ``n``
+    cores is (``get_spark`` sets one shuffle partition per core).
 
     NOT REENTRANT / NOT THREAD-SAFE: the cap mutates the session-global
     conf for the replay's duration, so any query PLANNED concurrently
@@ -65,6 +80,56 @@ def bounded_replay_shuffle(spark: SparkSession, n: int = 8):
     finally:
         conf.set("spark.sql.shuffle.partitions", prev)
 
+
+def run_bounded(
+    spark: SparkSession, writer: DataStreamWriter, release: Iterable[str] = ()
+) -> None:
+    """Run a bounded replay to its end: start ``writer`` (configured,
+    unstarted) under ``Trigger.AvailableNow`` — process everything
+    staged, then stop — inside `bounded_replay_shuffle`, and wait for
+    it. The dirs in ``release`` — stage, checkpoint and store, which
+    only the stream reads or writes — are removed as soon as it ends,
+    failed or not; a sink that a returned frame still reads stays until
+    interpreter exit (`session.scratch_dir`)."""
+    try:
+        with bounded_replay_shuffle(spark):
+            writer.trigger(availableNow=True).start().awaitTermination()
+    finally:
+        for path in release:
+            shutil.rmtree(path, ignore_errors=True)
+
+
+def replay_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    query_name: str,
+    output_mode: str = "append",
+    release: Iterable[str] = (),
+) -> DataFrame:
+    """`run_bounded` into the in-memory table ``query_name`` and return
+    it. The table holds the rows, so the staged input can go."""
+    run_bounded(
+        spark,
+        stream.writeStream.format("memory")
+        .queryName(query_name)
+        .outputMode(output_mode),
+        release,
+    )
+    return spark.table(query_name)
+
+
+def link_stage(path: str, prefix: str, copies: int = 1) -> str:
+    """A scratch dir holding ``copies`` symlinks to the parquet FILE
+    ``path``: the file stream source reads directories only. No data is
+    copied and the source stays read-only; under
+    ``maxFilesPerTrigger=1`` each link replays the file once more."""
+    stage = scratch_dir(prefix)
+    src = os.path.abspath(path)
+    for i in range(copies):
+        os.symlink(src, os.path.join(stage, f"{i}.parquet"))
+    return stage
+
+
 def stage_ordered_chunks(
     df: DataFrame,
     n_batches: int,
@@ -84,8 +149,6 @@ def stage_ordered_chunks(
     the crawl-ingest replay the per-chunk jobs were pure fixed
     overhead. ``repartition(n, "chunk")`` lands every chunk's rows in
     one task, so each partition dir holds exactly one part file."""
-    import os
-
     from ..operators.ranking import exact_ntile
 
     chunked = exact_ntile(df, n_batches, order_cols, bucket_col="chunk")
@@ -421,140 +484,49 @@ def replay_stream_dedup(
     (each event once), which the oracle checks. With a realistic
     watermark, events older than the horizon would re-emit — that
     eviction behavior is covered in tests/test_streaming.py."""
-    import os
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="evdedup_")
-    src = os.path.abspath(events_path)
-    os.symlink(src, os.path.join(stage, "events_a.parquet"))
-    os.symlink(src, os.path.join(stage, "events_b.parquet"))
+    stage = link_stage(events_path, "evdedup_", copies=2)
     raw = (
         spark.readStream.schema(EVENT_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
     deduped = dedup_event_stream(raw, keys=["event_id"], watermark="36500 days")
-    try:
-        with bounded_replay_shuffle(spark):
-            q = (
-                deduped.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        # two symlinks only, but temp dirs should not accumulate
-        # (ADVICE r14); the memory sink holds the rows
-        import shutil
-
-        shutil.rmtree(stage, ignore_errors=True)
-    return spark.table(query_name)
+    return replay_to_memory(spark, deduped, query_name, release=[stage])
 
 
 def stage_time_ordered(
-    spark: SparkSession, events_path: str, n_batches: int
-) -> str:
-    """Stage the bounded events table as ``n_batches`` (ts, event_id)-
-    ordered single-file chunks in a temp dir and return the dir —
-    split out of `replay_time_ordered` so several replays over the
-    same corpus can SHARE one staging write (staging is the single
-    biggest fixed cost of a bounded replay: one full sort+write of
-    the table)."""
-    import tempfile
-
-    stage = tempfile.mkdtemp(prefix="evchunks_")
-    ev = spark.read.parquet(events_path)
-    stage_ordered_chunks(ev, n_batches, ["ts", "event_id"], stage)
-    return stage
-
-
-def replay_staged(
-    spark: SparkSession,
-    stage_dir: str,
-    build_agg,
-    query_name: str,
-    output_mode: str = "append",
-    files_per_trigger: int | None = 1,
+    df: DataFrame, n_batches: int, order_cols: list[str], stage_dir: str
 ) -> DataFrame:
-    """Replay an already-staged chunk dir through ``build_agg`` into a
-    memory sink. ``files_per_trigger=1`` streams one chunk per
-    micro-batch (cross-batch state real); ``None`` collapses every
-    staged file into ONE micro-batch (the `_replay` shape, without
-    re-staging — intra-batch determinism then comes from the
-    operator's own per-group sort)."""
-    reader = spark.readStream.schema(EVENT_SCHEMA)
-    if files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
-    agg = build_agg(reader.parquet(stage_dir))
-    with bounded_replay_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(query_name)
-
-
-def replay_time_ordered(
-    spark: SparkSession,
-    events_path: str,
-    build_agg,
-    query_name: str,
-    n_batches: int = 3,
-    output_mode: str = "append",
-) -> DataFrame:
-    """Time-ordered MULTI-batch replay: stage the bounded events table
-    as ``n_batches`` (ts, event_id)-ordered single-file chunks
-    (`stage_ordered_chunks`) and stream them one per micro-batch
-    (``maxFilesPerTrigger=1``) through ``build_agg`` into a memory
-    sink. Where `_replay` collapses the corpus into ONE micro-batch,
-    this replay makes cross-batch state real: lifetime counters/budgets
-    straddle batch boundaries, and monotone (ts, event_id) chunking
-    means the result still equals the batch closed form — the q99
-    recipe, reusable for any events-table stateful operator.
-
-    The staging dir (a full sorted copy of the table) is removed once
-    the replay terminates — the memory sink holds the rows, so the
-    returned frame stays queryable (ADVICE r14: repeated runs were
-    accumulating sorted copies on disk). Callers of the split
-    `stage_time_ordered` + `replay_staged` pair own that cleanup
-    themselves."""
-    import shutil
-
-    stage = stage_time_ordered(spark, events_path, n_batches)
-    try:
-        return replay_staged(spark, stage, build_agg, query_name, output_mode)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    """Stage the bounded frame ``df`` into ``stage_dir`` as ``n_batches``
+    ``order_cols``-ordered chunks (`stage_ordered_chunks`) and return
+    the stream that replays them one chunk per micro-batch
+    (``maxFilesPerTrigger=1``), read with ``df``'s own schema. Where
+    `_replay` collapses its input into ONE micro-batch, this makes
+    cross-batch state real: lifetime counters and budgets straddle
+    batch boundaries, and monotone chunking means the result still
+    equals the batch closed form (the q99 recipe). The caller owns
+    ``stage_dir`` and hands it to `run_bounded`'s ``release``; several
+    replays may share one staging write (q97), the biggest fixed cost
+    of a replay — one full sort and write of the frame."""
+    stage_ordered_chunks(df, n_batches, order_cols, stage_dir)
+    return (
+        df.sparkSession.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(stage_dir, "*.parquet"))
+    )
 
 
 def _replay(spark, events_path, build_agg, query_name, output_mode="complete") -> DataFrame:
-    """Shared bounded-replay harness: stage the file, pick a stream
-    schema off the file's physical ts type, run build_agg(stream) into a
-    memory sink under Trigger.AvailableNow (complete mode for window
-    aggs; update mode for applyInPandasWithState, whose contract
-    forbids complete)."""
-    # the file streaming source requires a directory; when handed a bare
-    # parquet FILE (the testdata layout), stage it into a temp dir via
-    # symlink — no data copy, read-only on the source
-    import os
-    import tempfile
-
-    import shutil
-
-    symlink_stage = None
+    """Shared single-batch replay: pick a stream schema off the file's
+    physical ts type and run build_agg(stream) into a memory sink
+    (complete mode for window aggs; update mode for
+    applyInPandasWithState, whose contract forbids complete)."""
+    # the file streaming source reads directories: a bare parquet FILE
+    # (the testdata layout) is staged as a symlink
+    release = []
     if os.path.isfile(events_path):
-        symlink_stage = tempfile.mkdtemp(prefix="evstream_")
-        os.symlink(
-            os.path.abspath(events_path),
-            os.path.join(symlink_stage, "events.parquet"),
-        )
-        events_path = symlink_stage
+        events_path = link_stage(events_path, "evstream_")
+        release.append(events_path)
 
     try:
         spark.read.parquet(events_path).schema
@@ -584,26 +556,15 @@ def _replay(spark, events_path, build_agg, query_name, output_mode="complete") -
             nanos_set = True
             raw = spark.readStream.schema(ns_schema).parquet(events_path)
             ev = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        agg = build_agg(ev)
-        with bounded_replay_shuffle(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        return replay_to_memory(
+            spark, build_agg(ev), query_name, output_mode, release
+        )
     finally:
         if nanos_set:
             if prev is None:
                 spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
             else:
                 spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        if symlink_stage is not None:
-            # replay terminated; the memory sink holds the rows
-            shutil.rmtree(symlink_stage, ignore_errors=True)
-    return spark.table(query_name)
 
 
 def write_stream_parquet(
@@ -611,16 +572,16 @@ def write_stream_parquet(
     path: str,
     checkpoint: str,
     output_mode: str = "append",
-):
+) -> DataStreamWriter:
     """Fault-tolerant file sink: the checkpoint stores source offsets and
     the parquet sink keeps a transaction log (_spark_metadata), so a
     restarted query neither loses nor duplicates batches — end-to-end
-    exactly-once for replayable sources. Returns the StreamingQuery;
-    caller owns stop()/awaitTermination."""
+    exactly-once for replayable sources. Returns the configured
+    DataStreamWriter, unstarted: the caller picks the trigger and starts
+    it (`run_bounded` for a bounded replay, q59)."""
     return (
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode(output_mode)
-        .start()
     )

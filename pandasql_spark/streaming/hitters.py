@@ -182,53 +182,34 @@ def replay_mg_candidates(
 ) -> DataFrame:
     """Run the sharded-MG candidate pass through the REAL streaming
     engine over a bounded id-ordered replay of a documents table:
-    stage ``n_batches`` chunk files (`stage_ordered_chunks`), stream
+    stage ``n_batches`` chunk files (`stage_time_ordered`), stream
     them one per micro-batch so the per-shard summaries genuinely fold
     ACROSS batch boundaries, tokenize inside the stream, and return the
     FINAL (shard, items, n_shard) summary per shard — selected by max
     n_shard, which strictly increases per emission (a shard only emits
-    when it received rows). The staging dir is removed after the replay
-    terminates (the memory sink holds the rows — ADVICE r14 on staging
-    accumulation)."""
-    import os
-    import shutil
-    import tempfile
-
+    when it received rows). The staging dir is removed once the replay
+    ends (the memory sink holds the rows)."""
     from pyspark.sql import Window
 
-    from .events import bounded_replay_shuffle, stage_ordered_chunks
+    from ..functions.text import tokens
+    from ..session import scratch_dir
+    from .events import replay_to_memory, stage_time_ordered
 
     docs = spark.read.parquet(docs_path).select(id_col, text_col)
-    stage = tempfile.mkdtemp(prefix="hhchunks_")
-    try:
-        stage_ordered_chunks(docs, n_batches, [id_col], stage)
-        # schema comes from the staged frame itself, not a hardcoded
-        # "doc_id long" literal — any id column name/type replays
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(stage, "*.parquet"))
-        )
-        # canonical tokenizer — the same functions.text.tokens the
-        # batch stage (freq.heavy_hitter_tokens) and the q62 oracle
-        # use; a tokenizer change must move all three together (the
-        # r17 split-parity contract)
-        from ..functions.text import tokens
-
-        toks = stream.select(F.explode(tokens(text_col)).alias("token"))
-        with bounded_replay_shuffle(spark):
-            q = (
-                mg_stream_candidates(toks, "token", capacity, num_shards)
-                .writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    sink = spark.table(query_name)
+    stage = scratch_dir("hhchunks_")
+    stream = stage_time_ordered(docs, n_batches, [id_col], stage)
+    # canonical tokenizer — the same functions.text.tokens the batch
+    # stage (freq.heavy_hitter_tokens) and the q62 oracle use; a
+    # tokenizer change must move all three together (the r17
+    # split-parity contract)
+    toks = stream.select(F.explode(tokens(text_col)).alias("token"))
+    sink = replay_to_memory(
+        spark,
+        mg_stream_candidates(toks, "token", capacity, num_shards),
+        query_name,
+        "update",
+        release=[stage],
+    )
     w = Window.partitionBy("shard").orderBy(F.col("n_shard").desc())
     return (
         sink.withColumn("__rn", F.row_number().over(w))

@@ -52,6 +52,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from pandasql_spark.functions.text import let_bound, tokens
 from pandasql_spark.operators.dedup import (
@@ -61,8 +62,9 @@ from pandasql_spark.operators.dedup import (
     signature_est_jaccard,
     window_fps,
 )
+from pandasql_spark.session import scratch_dir
 
-DOC_SCHEMA = "doc_id long, text string"
+from .events import run_bounded, stage_time_ordered
 
 # Fingerprint-method VERSIONS: the r13 fold-order fix (dedup.py — the
 # perturbing literal now hashes first) changed every xxhash128 value,
@@ -282,10 +284,11 @@ def incremental_neardup_dedup(
     seed: int = 42,
     base_hash: str = "xxhash64",
     max_bucket_size: int | None = None,
-    available_now: bool = True,
-):
-    """Start the incremental near-dup stream; returns the
-    StreamingQuery. ``docs_stream`` must carry (id_col, text_col)."""
+) -> DataStreamWriter:
+    """Build the incremental near-dup stream and return its configured
+    DataStreamWriter, unstarted: the caller picks the trigger and
+    starts it (`run_bounded` for a bounded replay).
+    ``docs_stream`` must carry (id_col, text_col)."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         process_batch(
@@ -304,12 +307,9 @@ def incremental_neardup_dedup(
             max_bucket_size=max_bucket_size,
         )
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
+    return docs_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def replay_incremental_dedup(
@@ -325,42 +325,27 @@ def replay_incremental_dedup(
     order = id order), run to completion, and return the survivor set —
     which must equal the batch relation's survivors (docs that are not
     the id_b of any `minhash_neardup_pairs` pair). Gate q63's oracle
-    recomputes that relation independently in DuckDB."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="inc_dedup_")
-    stage = os.path.join(work, "stage")
-    docs = spark.read.parquet(documents_path).select("doc_id", "text")
-    # ntile over doc_id order → equal-size, id-ordered chunks, staged
-    # as one single-file parquet per chunk with ascending mtimes in ONE
-    # chunk-partitioned write (events.stage_ordered_chunks)
-    from .events import stage_ordered_chunks
-
-    stage_ordered_chunks(docs, n_batches, ["doc_id"], stage)
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage, "*.parquet"))
+    recomputes that relation independently in DuckDB. Stage, store and
+    checkpoint go when the replay ends; the survivors dir, which the
+    returned frame reads, at interpreter exit."""
+    work = scratch_dir("inc_dedup_")
+    stage, store, ckpt, survivors = (
+        os.path.join(work, d) for d in ("stage", "store", "ckpt", "survivors")
     )
-    from .events import bounded_replay_shuffle
-
-    with bounded_replay_shuffle(spark):
-        q = incremental_neardup_dedup(
-            spark,
-            stream,
-            store_dir=os.path.join(work, "store"),
-            survivors_dir=os.path.join(work, "survivors"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            threshold=threshold,
-            base_hash=base_hash,
-        )
-        q.awaitTermination()
+    docs = spark.read.parquet(documents_path).select("doc_id", "text")
+    stream = stage_time_ordered(docs, n_batches, ["doc_id"], stage)
+    run_bounded(
+        spark,
+        incremental_neardup_dedup(
+            spark, stream, store, survivors, ckpt,
+            threshold=threshold, base_hash=base_hash,
+        ),
+        release=(stage, store, ckpt),
+    )
     # explicit schema (a subset projection is valid against parquet):
     # an all-duplicates corpus leaves zero part files, which schema
     # inference rejects while an empty survivor set is legitimate
-    return spark.read.schema("doc_id long").parquet(
-        os.path.join(work, "survivors")
-    ).select("doc_id")
+    return spark.read.schema("doc_id long").parquet(survivors).select("doc_id")
 
 
 # ------------------------------------------------------- substring spans
@@ -632,10 +617,11 @@ def incremental_substring_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     fingerprint: str = "xxhash",
-    available_now: bool = True,
-):
-    """Start the incremental substring-dedup stream; returns the
-    StreamingQuery. ``docs_stream`` must carry (id_col, text_col)."""
+) -> DataStreamWriter:
+    """Build the incremental substring-dedup stream and return its
+    configured DataStreamWriter, unstarted (see
+    `incremental_neardup_dedup`). ``docs_stream`` must carry
+    (id_col, text_col)."""
 
     def _process(batch: DataFrame, batch_id: int) -> None:
         process_substring_batch(
@@ -643,12 +629,9 @@ def incremental_substring_dedup(
             k=k, text_col=text_col, id_col=id_col, fingerprint=fingerprint,
         )
 
-    writer = docs_stream.writeStream.foreachBatch(_process).option(
+    return docs_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def replay_incremental_substring_dedup(
@@ -661,30 +644,18 @@ def replay_incremental_substring_dedup(
     engine (id-ordered staged chunks, maxFilesPerTrigger=1) and return
     the spliced survivors — which must equal the batch
     `substring_dedup(keep="first")` over the full corpus."""
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="inc_subdedup_")
-    stage = os.path.join(work, "stage")
-    docs = spark.read.parquet(documents_path).select("doc_id", "text")
-    from .events import bounded_replay_shuffle, stage_ordered_chunks
-
-    stage_ordered_chunks(docs, n_batches, ["doc_id"], stage)
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage, "*.parquet"))
+    work = scratch_dir("inc_subdedup_")
+    stage, store, ckpt, survivors = (
+        os.path.join(work, d) for d in ("stage", "store", "ckpt", "survivors")
     )
-    with bounded_replay_shuffle(spark):
-        q = incremental_substring_dedup(
-            spark,
-            stream,
-            store_dir=os.path.join(work, "store"),
-            survivors_dir=os.path.join(work, "survivors"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            k=k,
-        )
-        q.awaitTermination()
+    docs = spark.read.parquet(documents_path).select("doc_id", "text")
+    stream = stage_time_ordered(docs, n_batches, ["doc_id"], stage)
+    run_bounded(
+        spark,
+        incremental_substring_dedup(spark, stream, store, survivors, ckpt, k=k),
+        release=(stage, store, ckpt),
+    )
     return spark.read.schema(
         "doc_id long, text string, n_tokens long, "
         "sub_dup_windows long, sub_dup_tokens long"
-    ).parquet(os.path.join(work, "survivors"))
+    ).parquet(survivors)

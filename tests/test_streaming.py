@@ -165,7 +165,7 @@ def test_exactly_once_parquet_sink(spark, event_dir, tmp_path):
 
     for _ in range(2):  # second start = restart from checkpoint
         stream = read_event_stream(spark, event_dir)
-        q = write_stream_parquet(stream, out, ckpt)
+        q = write_stream_parquet(stream, out, ckpt).start()
         q.processAllAvailable()
         q.stop()
 

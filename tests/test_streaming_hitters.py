@@ -144,16 +144,24 @@ def test_validation(spark):
         verify_heavy_hitters(ev, ev.select(F.array("token").alias("items")), "token", 0.0)
 
 
-def test_replay_mg_candidates_final_rows_and_staging_cleanup(spark):
+def test_replay_mg_candidates_final_rows_and_staging_cleanup(spark, monkeypatch):
     """The q62 fold's replay helper: one FINAL summary row per touched
     shard (max-n_shard selection), shard counts sum to the token count,
-    and the staging dir is removed after the replay (ADVICE r14 on
-    staging accumulation)."""
-    import glob
+    and the staging dir it made is removed after the replay (ADVICE r14
+    on staging accumulation)."""
+    import os
+    import tempfile
 
     from pandasql_spark.streaming.hitters import replay_mg_candidates
 
-    before = set(glob.glob("/tmp/hhchunks_*"))
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*args, **kwargs):
+        made.append(mkdtemp(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
     out = replay_mg_candidates(
         spark,
         f"{SF}/documents.parquet",
@@ -163,7 +171,10 @@ def test_replay_mg_candidates_final_rows_and_staging_cleanup(spark):
         n_batches=3,
         query_name="t_mg_replay_clean",
     ).toPandas()
-    assert set(glob.glob("/tmp/hhchunks_*")) == before  # staging removed
+    # the replay staged into exactly one hhchunks_ dir, and it is gone
+    (stage,) = [d for d in made if os.path.basename(d).startswith("hhchunks_")]
+    assert os.path.dirname(stage) == tempfile.gettempdir()
+    assert not os.path.exists(stage)  # staging removed
     assert out["shard"].is_unique
     n_tok = (
         spark.read.parquet(f"{SF}/documents.parquet")
